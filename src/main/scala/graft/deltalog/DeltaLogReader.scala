@@ -1,13 +1,16 @@
 package graft.deltalog
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.txlog._
@@ -17,16 +20,19 @@ import graft.txlog._
   */
 final case class LastCheckpoint(version: Long, size: Long)
 
-/** Reads a Delta Lake transaction log without delta-spark: JSON commits via
-  * `spark.read.json` with an explicit action schema, parquet checkpoints via
-  * `spark.read.parquet` (Spark decodes the nested add/remove/metaData structs
-  * natively — the reference hand-rolls repetition-level decoding,
-  * TransactionLogEntry.cs:365-554; we get S5 for free).
+/** Reads a Delta Lake transaction log without delta-spark: commit JSONs are
+  * parsed on the driver with Jackson (one open per file, one `readTree` per
+  * line), parquet checkpoints via `spark.read.parquet` with the explicit
+  * [[DeltaLogReader.ActionSchema]] (Spark decodes the nested add/remove/
+  * metaData structs natively — the reference hand-rolls repetition-level
+  * decoding, TransactionLogEntry.cs:365-554; we get S5 for free).
   *
-  * Scale posture: all commit files of one poll are read in ONE Spark job
-  * (`json(paths:_*)`), not one job per blob; the checkpoint parquet scan is
-  * distributed. Only file-level *metadata* (one small item per data file) is
-  * collected to the driver — O(files), never O(rows).
+  * Scale posture: every caller folds the log on the driver anyway, and a
+  * poll's commits are a few kB each, so parsing them in place launches no
+  * Spark job (the reference folds on its CLI the same way,
+  * TransactionLog.cs:72-196). Only the checkpoint — O(live files) — goes
+  * through a distributed scan. Only file-level *metadata* (one small item
+  * per data file) ever reaches the driver — O(files), never O(rows).
   *
   * Reference: Storage/DeltaLake/DeltaTableGateway.cs (S1-S5, O1, W5),
   * TransactionLogEntry.cs:123-172 (JSON parse), :278-315 (schema extraction).
@@ -50,21 +56,20 @@ class DeltaLogReader(
   private[graft] val commitFilesRead   = new java.util.concurrent.atomic.AtomicLong
   private[graft] val checkpointsLoaded = new java.util.concurrent.atomic.AtomicLong
 
+  /** One LIST of `_delta_log` (empty when the log does not exist yet). */
+  private def listLog(): Seq[Path] =
+    if (!fs.exists(logPath)) Seq.empty
+    else fs.listStatus(logPath).toSeq.map(_.getPath)
+
   /** S1/S2: list commit blobs, optionally bounded, in tx order. */
-  def listCommits(fromTxId: Long = 0L, toTxId: Long = Long.MaxValue): Seq[(Long, Path)] = {
-    if (!fs.exists(logPath)) return Seq.empty
-    fs.listStatus(logPath)
-      .iterator
-      .flatMap { st =>
-        st.getPath.getName match {
-          case CommitFileRe(digits) => Some(digits.toLong -> st.getPath)
-          case _                    => None
-        }
-      }
+  def listCommits(fromTxId: Long = 0L, toTxId: Long = Long.MaxValue): Seq[(Long, Path)] =
+    commitsIn(listLog(), fromTxId, toTxId)
+
+  private def commitsIn(logFiles: Seq[Path], fromTxId: Long, toTxId: Long): Seq[(Long, Path)] =
+    logFiles
+      .flatMap(p => extractTxId(p.getName).map(_ -> p))
       .filter { case (tx, _) => tx >= fromTxId && tx <= toTxId }
-      .toSeq
       .sortBy(_._1)
-  }
 
   /** S4: `_last_checkpoint` pointer (driver-side — a few bytes). */
   def readLastCheckpoint(): Option[LastCheckpoint] = {
@@ -79,68 +84,65 @@ class DeltaLogReader(
     }
   }
 
-  /** S3: read a *set* of commit blobs in one Spark job and return one TxLog
-    * per commit, in tx order.
+  /** S3: parse a *set* of commit blobs on the driver and return one TxLog
+    * per commit that holds engine actions, in tx order.
     */
   def readCommits(commits: Seq[(Long, Path)]): Seq[TxLog] = {
-    if (commits.isEmpty) return Seq.empty
     commitFilesRead.addAndGet(commits.size)
-    val byPath = commits.map { case (tx, p) => p.toUri.toString -> tx }.toMap
-    val rows = spark.read
-      .schema(ActionSchema.add("_corrupt", StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .json(commits.map(_._2.toUri.toString): _*)
-      .withColumn("_file", input_file_name())
-      .collect()
-
-    // a malformed commit line must fail LOUDLY: with an explicit schema it
-    // would otherwise parse to an all-null row, be dropped as "no engine
-    // actions", and silently present the table as empty/behind — the same
-    // failure class as a log gap
-    rows.find(r => r.getAs[String]("_corrupt") != null).foreach { r =>
-      throw new IllegalStateException(
-        s"Corrupt Delta commit JSON in ${r.getAs[String]("_file")} for table " +
-          s"$mirrorTableName: '${r.getAs[String]("_corrupt").take(120)}' — refusing to read")
-    }
-    // the other torn-write shape: a commit file that parses to ZERO rows
-    // (zero bytes, or whitespace-only — the JSON source drops blank lines
-    // without marking them corrupt). A valid commit always yields ≥1 row
-    // (even commitInfo/txn-only lines parse to an all-null-action row).
-    val rowTxs = rows.map(r =>
-      byPath.getOrElse(r.getAs[String]("_file"),
-        extractTxId(new Path(r.getAs[String]("_file")).getName).getOrElse(-1L))).toSet
-    commits.find { case (tx, _) => !rowTxs.contains(tx) }.foreach { case (tx, p) =>
-      throw new IllegalStateException(
-        s"Commit file $p of table $mirrorTableName (tx $tx) contains no JSON records " +
-          "(torn write?) — refusing to read")
-    }
-
-    val grouped = rows.toSeq.groupBy { r =>
-      byPath.getOrElse(
-        r.getAs[String]("_file"),
-        // input_file_name may differ in URI normalization; fall back on tx-id parse
-        extractTxId(new Path(r.getAs[String]("_file")).getName)
-          .getOrElse(sys.error(s"Unexpected commit file ${r.getAs[String]("_file")}")))
-    }
     // commits whose actions are all non-engine (commitInfo/txn only) fold to
     // zero items and are skipped; the tx range still advances past them when
     // a later non-empty commit lands in the same batch.
-    commits.flatMap { case (tx, _) =>
-      val items = grouped.getOrElse(tx, Seq.empty).flatMap(rowToItem(_, tx, tx))
+    commits.flatMap { case (tx, p) =>
+      val items = parseCommit(tx, p)
       if (items.isEmpty) None else Some(TxLog(items))
     }
   }
 
-  /** S5/O1: read a `<v>.checkpoint.parquet` (possibly multi-part) into one
-    * cumulative TxLog with the given tx range.
+  /** One commit file → its engine items. Both torn-write shapes fail
+    * LOUDLY: a line that is not a JSON object (or holds a wrong-typed field
+    * the engine consumes) would otherwise map to no actions and silently
+    * present the table as empty/behind — the same failure class as a log
+    * gap; and a file with no records at all (zero bytes, or whitespace
+    * only) is never a valid commit, which always holds ≥1 action line.
     */
-  def readCheckpoint(version: Long, startTxId: Long): TxLog = {
+  private def parseCommit(tx: Long, p: Path): Seq[TransactionItem] = {
+    val now     = Instant.now()
+    val out     = Seq.newBuilder[TransactionItem]
+    var records = 0
+    val in = new BufferedReader(new InputStreamReader(fs.open(p), StandardCharsets.UTF_8))
+    try {
+      var line = in.readLine()
+      while (line != null) {
+        if (line.trim.nonEmpty) { // blank lines are not records (as in JSON Lines)
+          def corrupt(why: String) = new IllegalStateException(
+            s"Corrupt Delta commit JSON in $p for table $mirrorTableName ($why): " +
+              s"'${line.take(120)}' — refusing to read")
+          val node =
+            try Mapper.readTree(line)
+            catch { case e: JsonProcessingException => throw corrupt(e.getOriginalMessage) }
+          if (!node.isObject) throw corrupt("not a JSON object")
+          records += 1
+          try out ++= toItems(JsonFields(node), tx, tx, now)
+          catch { case e: WrongType => throw corrupt(e.getMessage) }
+        }
+        line = in.readLine()
+      }
+    } finally in.close()
+    if (records == 0)
+      throw new IllegalStateException(
+        s"Commit file $p of table $mirrorTableName (tx $tx) contains no JSON records " +
+          "(torn write?) — refusing to read")
+    out.result()
+  }
+
+  /** S5/O1: read a `<v>.checkpoint.parquet` (possibly multi-part) into one
+    * cumulative TxLog with the given tx range. `logFiles` is a `_delta_log`
+    * listing the caller already holds (one LIST per snapshot, not two).
+    */
+  def readCheckpoint(version: Long, startTxId: Long, logFiles: Seq[Path] = listLog()): TxLog = {
     checkpointsLoaded.incrementAndGet()
     val prefix = f"$version%020d.checkpoint"
-    val names = fs
-      .listStatus(logPath)
-      .map(_.getPath)
+    val names = logFiles
       .filter { p =>
         val n = p.getName
         n.startsWith(prefix) && n.endsWith(".parquet")
@@ -156,7 +158,7 @@ class DeltaLogReader(
     val parts     = names.map(_.getName).collect { case MultiPart(i, n) => (i.toInt, n.toInt) }
     if (parts.nonEmpty) {
       val declared = parts.map(_._2).distinct
-      val indices  = parts.map(_._1).sorted.toSeq
+      val indices  = parts.map(_._1).sorted
       // the indices must be EXACTLY 1..n — a count-only check passes mixed
       // sets like {single-file form, part 2/3, part 3/3} (3 files, n=3),
       // which double-counts or drops actions; and no single-file-form name
@@ -168,15 +170,21 @@ class DeltaLogReader(
           s"${declared.mkString("/")} parts with indices ${indices.mkString(",")}")
     }
 
-    val df   = spark.read.parquet(names.map(_.toUri.toString).toIndexedSeq: _*)
-    val cols = df.columns.toSet
-    // include `protocol`: real Delta checkpoints embed the protocol action
-    // and later commits don't restate it — selecting it keeps rowToItem's
-    // minReaderVersion gate effective on the checkpoint-bootstrap path too
-    val wanted = Seq("metaData", "add", "remove", "protocol").filter(cols)
-    val rows = df.select(wanted.map(col): _*).collect()
-    TxLog(rows.toSeq.flatMap(rowToItem(_, startTxId, version)))
+    // the explicit schema skips footer inference (a Spark job per read);
+    // columns a checkpoint lacks read as null. `protocol` is included: real
+    // Delta checkpoints embed the protocol action and later commits don't
+    // restate it — reading it keeps the minReaderVersion gate effective on
+    // the checkpoint-bootstrap path too
+    val rows = spark.read.schema(ActionSchema)
+      .parquet(names.map(_.toUri.toString): _*)
+      .select("metaData", "add", "remove", "protocol")
+      .collect()
+    TxLog(rows.toSeq.flatMap(rowItems(_, startTxId, version)))
   }
+
+  /** One action row typed by [[DeltaLogReader.ActionSchema]] → its items. */
+  private[deltalog] def rowItems(row: Row, startTxId: Long, endTxId: Long): Seq[TransactionItem] =
+    toItems(RowFields(row), startTxId, endTxId, Instant.now())
 
   /** The scan planner (DeltaTableGateway.cs:71-122 / SURVEY §3.3): compute
     * the next coalesced batch of work given the already-applied state.
@@ -192,13 +200,14 @@ class DeltaLogReader(
     val fromTxId = current.map(_.endTxId + 1).getOrElse(0L)
     readLastCheckpoint() match {
       case Some(ckpt) if fromTxId < ckpt.version =>
-        val cumulative = readCheckpoint(ckpt.version, startTxId = fromTxId)
+        val logFiles   = listLog()
+        val cumulative = readCheckpoint(ckpt.version, startTxId = fromTxId, logFiles)
         val deltaLog = current match {
           case Some(c) => cumulative.delta(c)
           case None    => Some(cumulative)
         }
-        val after = readCommits(
-          checkContiguous(listCommits(ckpt.version + 1, ckpt.version + readAhead), ckpt.version + 1))
+        val after = readCommits(checkContiguous(
+          commitsIn(logFiles, ckpt.version + 1, ckpt.version + readAhead), ckpt.version + 1))
         val logs = deltaLog.toSeq ++ after
         if (logs.isEmpty) None else Some(TxLog.coalesce(logs))
       case _ =>
@@ -218,12 +227,14 @@ class DeltaLogReader(
     * cleanup leaves exactly this) is NOT empty: fall back to the
     * `_last_checkpoint` state instead of returning None.
     */
-  def fullSnapshot(): Option[TxLog] =
-    listCommits().lastOption match {
-      case Some((last, _)) => snapshotAsOf(last)
+  def fullSnapshot(): Option[TxLog] = {
+    val logFiles = listLog()
+    commitsIn(logFiles, 0L, Long.MaxValue).lastOption match {
+      case Some((last, _)) => snapshotAsOf(last, logFiles)
       case None =>
-        readLastCheckpoint().map(c => readCheckpoint(c.version, startTxId = 0L))
+        readLastCheckpoint().map(c => readCheckpoint(c.version, startTxId = 0L, logFiles))
     }
+  }
 
   /** Table state as of commit `version` (inclusive) — time travel, and the
     * shared fold under [[fullSnapshot]]. Bootstraps from the NEWEST on-disk
@@ -234,8 +245,13 @@ class DeltaLogReader(
     * version argument mean different data over time (Delta's versionAsOf
     * errors the same way).
     */
-  def snapshotAsOf(version: Long): Option[TxLog] = {
-    val commits = listCommits()
+  def snapshotAsOf(version: Long): Option[TxLog] = snapshotAsOf(version, listLog())
+
+  // one LIST of the log dir serves the commit list, the checkpoint versions
+  // and the checkpoint part names — directory LIST is the dominant metadata
+  // cost on object stores
+  private def snapshotAsOf(version: Long, logFiles: Seq[Path]): Option[TxLog] = {
+    val commits = commitsIn(logFiles, 0L, Long.MaxValue)
     if (commits.isEmpty) return None
     val last = commits.last._1
     require(version >= 0 && version <= last,
@@ -244,12 +260,10 @@ class DeltaLogReader(
     // the rename steps of a re-checkpoint) is skipped in favor of an older
     // checkpoint or full replay — commits are never deleted, so the fold
     // stays correct, only slower
-    val fromCheckpoint = checkpointVersions().filter(_ <= version).sorted.reverse.view
+    val fromCheckpoint = checkpointVersions(logFiles).filter(_ <= version).reverse.view
       .flatMap { ckptV =>
         try {
-          val cumulative = readCheckpoint(ckptV, startTxId = 0L)
-          // filter the in-hand listing instead of re-LISTing the log dir —
-          // directory LIST is the dominant metadata cost on object stores
+          val cumulative = readCheckpoint(ckptV, startTxId = 0L, logFiles)
           val after = readCommits(
             checkContiguous(commits.filter(_._1 > ckptV), ckptV + 1).filter(_._1 <= version))
           Some(TxLog.coalesce(cumulative +: after))
@@ -267,14 +281,9 @@ class DeltaLogReader(
   }
 
   /** Versions with a (single- or multi-part) checkpoint parquet on disk. */
-  private def checkpointVersions(): Seq[Long] = {
+  private def checkpointVersions(logFiles: Seq[Path]): Seq[Long] = {
     val Ckpt = raw"(\d{20})\.checkpoint(\.\d{10}\.\d{10})?\.parquet".r
-    if (!fs.exists(logPath)) return Seq.empty
-    fs.listStatus(logPath).toSeq
-      .map(_.getPath.getName)
-      .collect { case Ckpt(v, _) => v.toLong }
-      .distinct
-      .sorted
+    logFiles.map(_.getName).collect { case Ckpt(v, _) => v.toLong }.distinct.sorted
   }
 
   /** A vacuumed/gappy log means unrecoverable history — fail loudly rather
@@ -293,95 +302,65 @@ class DeltaLogReader(
     commits
   }
 
-  // ---- row → item mapping -------------------------------------------------
+  // ---- action → item mapping ---------------------------------------------
 
-  private def rowToItem(row: Row, startTxId: Long, endTxId: Long): Seq[TransactionItem] = {
-    val now = Instant.now()
+  /** One action record (a commit-JSON line or a checkpoint row) → its
+    * engine items, in protocol / metaData / add / remove order.
+    */
+  private def toItems(
+      action: Fields, startTxId: Long, endTxId: Long, now: Instant): Seq[TransactionItem] = {
     val out = Seq.newBuilder[TransactionItem]
-
-    def structOpt(name: String): Option[Row] =
-      if (row.schema.fieldNames.contains(name) && !row.isNullAt(row.fieldIndex(name)))
-        Some(row.getAs[Row](name))
-      else None
+    def item(act: TxAction, ts: Option[Long]) = TransactionItem(
+      tableName = mirrorTableName,
+      startTxId = startTxId,
+      endTxId = endTxId,
+      action = act,
+      state = TxState.Initial,
+      mirrorTimestamp = now,
+      deltaTimestamp = ts.map(Instant.ofEpochMilli))
 
     // protocol gate: reader version 1 is the classic parquet protocol this
     // engine implements; higher versions introduce features (deletion
     // vectors, column mapping) that change what the data files MEAN — reading
     // on regardless would silently resurrect deleted rows. Fail loudly, the
     // same stance as the reference's parquet-only format check.
-    structOpt("protocol").foreach { p =>
-      val minReader = Option(p.getAs[java.lang.Integer]("minReaderVersion")).fold(1)(_.intValue)
+    action.struct("protocol").foreach { p =>
+      val minReader = p.int("minReaderVersion").getOrElse(1)
       require(minReader <= 1,
         s"Unsupported Delta protocol: minReaderVersion=$minReader (this reader implements version 1; " +
           "newer reader features like deletion vectors or column mapping would be silently misread)")
     }
 
-    structOpt("metaData").foreach { m =>
-      val format = Option(m.getAs[Row]("format"))
-      val provider = format.map(_.getAs[String]("provider")).orNull
+    action.struct("metaData").foreach { m =>
+      val provider = m.struct("format").flatMap(_.str("provider")).orNull
       require(
         provider == null || provider.equalsIgnoreCase("parquet"),
         s"Only parquet-format Delta tables are supported, got '$provider'")
-      val schemaString = m.getAs[String]("schemaString")
-      val schema       = DataType.fromJson(schemaString).asInstanceOf[StructType]
-      val pcols =
-        Option(m.getAs[scala.collection.Seq[String]]("partitionColumns"))
-          .map(_.toList).getOrElse(Nil)
-      out += TransactionItem(
-        tableName = mirrorTableName,
-        startTxId = startTxId,
-        endTxId = endTxId,
-        action = TxAction.Schema,
-        state = TxState.Initial,
-        mirrorTimestamp = now,
-        deltaTimestamp = Option(m.getAs[java.lang.Long]("createdTime")).map(t => Instant.ofEpochMilli(t)),
-        partitionColumns = Some(pcols),
+      val schema = DataType.fromJson(m.str("schemaString").orNull).asInstanceOf[StructType]
+      out += item(TxAction.Schema, m.long("createdTime")).copy(
+        partitionColumns = Some(m.strSeq("partitionColumns").getOrElse(Nil)),
         schema = Some(schema.fields.toSeq.map(f => ColumnSpec(f.name, f.dataType.sql))),
         internalState = InternalState(
-          deltaTableId = Option(m.getAs[String]("id")),
-          deltaTableName = Option(m.getAs[String]("name")))
-      )
+          deltaTableId = m.str("id"),
+          deltaTableName = m.str("name")))
     }
 
-    structOpt("add").foreach { a =>
-      out += TransactionItem(
-        tableName = mirrorTableName,
-        startTxId = startTxId,
-        endTxId = endTxId,
-        action = TxAction.Add,
-        state = TxState.Initial,
-        mirrorTimestamp = now,
-        deltaTimestamp =
-          Option(a.getAs[java.lang.Long]("modificationTime")).map(t => Instant.ofEpochMilli(t)),
-        blobPath = Option(a.getAs[String]("path")),
-        partitionValues =
-          Option(a.getAs[scala.collection.Map[String, String]]("partitionValues")).map(_.toMap),
-        size = Option(a.getAs[java.lang.Long]("size")).map(_.longValue),
-        recordCount = Option(a.getAs[String]("stats")).flatMap(parseNumRecords),
-        tags =
-          if (a.schema.fieldNames.contains("tags"))
-            Option(a.getAs[scala.collection.Map[String, String]]("tags")).map(_.toMap)
-          else None
-      )
+    action.struct("add").foreach { a =>
+      out += item(TxAction.Add, a.long("modificationTime")).copy(
+        blobPath = a.str("path"),
+        partitionValues = a.strMap("partitionValues"),
+        size = a.long("size"),
+        recordCount = a.str("stats").flatMap(parseNumRecords),
+        tags = a.strMap("tags"))
     }
 
-    structOpt("remove").foreach { r =>
-      out += TransactionItem(
-        tableName = mirrorTableName,
-        startTxId = startTxId,
-        endTxId = endTxId,
-        action = TxAction.Remove,
-        state = TxState.Initial,
-        mirrorTimestamp = now,
-        deltaTimestamp =
-          Option(r.getAs[java.lang.Long]("deletionTimestamp")).map(t => Instant.ofEpochMilli(t)),
-        blobPath = Option(r.getAs[String]("path")),
+    action.struct("remove").foreach { r =>
+      out += item(TxAction.Remove, r.long("deletionTimestamp")).copy(
+        blobPath = r.str("path"),
         // Synapse sometimes omits partition values on remove — keep nullable
         // (TransactionItem.cs:305-306, TransactionLogEntry.cs:257-261).
-        partitionValues =
-          Option(r.getAs[scala.collection.Map[String, String]]("partitionValues")).map(_.toMap),
-        size = Option(r.getAs[java.lang.Long]("size")).map(_.longValue)
-      )
+        partitionValues = r.strMap("partitionValues"),
+        size = r.long("size"))
     }
     out.result()
   }
@@ -407,9 +386,72 @@ object DeltaLogReader {
     case _               => None
   }
 
+  /** Typed, null-as-None access to the fields of one Delta action — the
+    * shape both action sources share, so they map to items through one
+    * `toItems`.
+    */
+  private sealed trait Fields {
+    def struct(name: String): Option[Fields]
+    def str(name: String): Option[String]
+    def long(name: String): Option[Long]
+    def int(name: String): Option[Int]
+    def strMap(name: String): Option[Map[String, String]]
+    def strSeq(name: String): Option[Seq[String]]
+  }
+
+  /** A checkpoint parquet row, read with [[ActionSchema]] (absent → null). */
+  private final case class RowFields(row: Row) extends Fields {
+    private def get[T](name: String): Option[T] = {
+      val i = row.fieldIndex(name)
+      if (row.isNullAt(i)) None else Some(row.getAs[T](i))
+    }
+    def struct(name: String): Option[Fields] = get[Row](name).map(RowFields)
+    def str(name: String): Option[String]    = get[String](name)
+    def long(name: String): Option[Long]     = get[java.lang.Long](name).map(_.longValue)
+    def int(name: String): Option[Int]       = get[java.lang.Integer](name).map(_.intValue)
+    def strMap(name: String): Option[Map[String, String]] =
+      get[scala.collection.Map[String, String]](name).map(_.toMap)
+    def strSeq(name: String): Option[Seq[String]] =
+      get[scala.collection.Seq[String]](name).map(_.toList)
+  }
+
+  /** A wrong JSON type in a field the engine consumes. */
+  private final class WrongType(msg: String) extends RuntimeException(msg)
+
+  /** A commit-JSON object, typed the way Spark's JSON source types it
+    * against [[ActionSchema]]: JSON null or an absent field is None; a
+    * string field takes any other value's JSON text; every other type
+    * mismatch (a non-integral or oversized number, a non-object struct)
+    * throws [[WrongType]] where Spark would mark the record corrupt.
+    */
+  private final case class JsonFields(node: JsonNode) extends Fields {
+    private def get(name: String, want: String)(ok: JsonNode => Boolean): Option[JsonNode] =
+      Option(node.get(name)).filterNot(_.isNull).map { v =>
+        if (ok(v)) v else throw new WrongType(s"field '$name' is not $want: $v")
+      }
+    private def text(v: JsonNode): String = if (v.isTextual) v.asText else v.toString
+    def struct(name: String): Option[Fields] =
+      get(name, "an object")(_.isObject).map(JsonFields)
+    def str(name: String): Option[String] = get(name, "a string")(_ => true).map(text)
+    def long(name: String): Option[Long] =
+      get(name, "a long")(v => v.isIntegralNumber && v.canConvertToLong).map(_.longValue)
+    def int(name: String): Option[Int] =
+      get(name, "an int")(v => v.isIntegralNumber && v.canConvertToInt).map(_.intValue)
+    def strMap(name: String): Option[Map[String, String]] =
+      get(name, "an object")(_.isObject).map { v =>
+        v.properties.asScala.map { e =>
+          e.getKey -> (if (e.getValue.isNull) null else text(e.getValue))
+        }.toMap
+      }
+    def strSeq(name: String): Option[Seq[String]] =
+      get(name, "an array")(_.isArray).map(
+        _.elements.asScala.map(e => if (e.isNull) null else text(e)).toList)
+  }
+
   /** Explicit Delta action schema (the public Delta protocol subset the
-    * engine consumes — TransactionLogEntry.cs:19-120). Explicit so commit
-    * reads never pay schema inference and never mis-infer empty maps.
+    * engine consumes — TransactionLogEntry.cs:19-120): the checkpoint
+    * parquet layout, written and read without schema inference, and the
+    * typing the driver-side commit-JSON parse follows.
     */
   val ActionSchema: StructType = StructType(Seq(
     StructField("metaData", StructType(Seq(

@@ -118,7 +118,8 @@ class DeltaLogWriter(spark: SparkSession, tablePath: String) {
     n.toString
   }
 
-  /** Materialize the cumulative state up to the latest commit as a
+  /** Materialize `folded` — the table state as of commit `version`, which
+    * the caller already holds — as that version's
     * `<v>.checkpoint.parquet` + `_last_checkpoint` pointer (what Delta
     * writers do every N commits; lets readers log-skip, O1).
     *
@@ -127,15 +128,8 @@ class DeltaLogWriter(spark: SparkSession, tablePath: String) {
     * what real Delta writers produce once the file count outgrows a single
     * checkpoint parquet, i.e. exactly the 100 TB regime.
     */
-  def writeCheckpoint(mirrorTableName: String = "t", numParts: Int = 1): Long = {
+  def writeCheckpoint(folded: graft.txlog.TxLog, version: Long, numParts: Int = 1): Long = {
     require(numParts >= 1, "numParts must be >= 1")
-    val reader  = new DeltaLogReader(spark, tablePath, mirrorTableName)
-    val commits = reader.listCommits()
-    require(commits.nonEmpty, s"No commits to checkpoint under $tablePath")
-    val version = commits.last._1
-    val logs    = reader.readCommits(commits)
-    val folded  = graft.txlog.TxLog.coalesce(logs)
-
     val rows: Seq[Row] = folded.metadata.map { m =>
       val schemaJson = graft.types.KustoTypes.structFrom(m.schema.getOrElse(Seq.empty)).json
       Row(

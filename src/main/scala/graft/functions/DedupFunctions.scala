@@ -211,7 +211,7 @@ object DedupFunctions {
     // posture [[exactJaccardPairs]] codifies by joining grams on xxhash64 —
     // and the DuckDB oracle re-verifies byte-identical output at both
     // recorded scales (gram-hash A/B at the 100× replica:
-    // OPTIMIZATION_r18.md). The lambda reads MATERIALIZED columns (_tok,
+    // commit f6f9b67). The lambda reads MATERIALIZED columns (_tok,
     // _wh), never re-derives per element; char shingles (wordGrams = 0)
     // keep the string form — that path's substrings are cheap and no
     // registry query uses it.
@@ -244,7 +244,7 @@ object DedupFunctions {
     // draw, same pmod arithmetic — MinHashParitySpec pins the equality)
     // but without pushing corpus×grams generator rows through aggregate
     // buffers and a shuffle — the pipeline's heaviest stage at the 100×
-    // replica (OPTIMIZATION_r18.md). A NULL signature marks an empty gram
+    // replica (commit f6f9b67). A NULL signature marks an empty gram
     // set; filtering it keeps the signature table row-identical to the
     // aggregate form, which emitted no row for such docs. (The per-row
     // BUILT-IN array-expression form stays off the table: Catalyst

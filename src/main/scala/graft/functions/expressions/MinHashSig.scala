@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * instead of pushing corpus×grams rows through a generator, 64 aggregate
   * buffer slots, and a shuffle (the signature aggregation was the dedup
   * pipeline's single heaviest stage at the 100× replica —
-  * OPTIMIZATION_r18.md).
+  * commit f6f9b67).
   *
   * Returns NULL for an empty gram set: the aggregate lowering produced no
   * row for such a document, so callers filter nulls to keep the signature

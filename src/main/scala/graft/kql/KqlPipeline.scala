@@ -1844,8 +1844,8 @@ object KqlPipeline {
         // no-op "default plan", which let the planner pick a broadcast
         // whose relation is built+compressed on ONE driver thread — the
         // graph queries' orders⋈lineitem edge subtrees spent ~8 s per run
-        // there at the 100× replica with every executor idle (r18,
-        // thread-dump evidence in OPTIMIZATION_r18.md).
+        // there at the 100× replica with every executor idle (r18: commit
+        // f60c72c, with the round's bench records in 05f069b).
         val right = hint match {
           case Some("broadcast") => broadcast(right0)
           case Some("shuffle")   => right0.hint("shuffle_hash")

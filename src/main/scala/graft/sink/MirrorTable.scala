@@ -244,8 +244,7 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     val staged = groups.zipWithIndex.map { case ((pv, files), gi) =>
       val totalBytes = files.map(_.size).sum
       val nOut       = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      val in = spark.read.schema(tableSchema)
-        .parquet(files.map(a => new Path(root, a.path).toString): _*)
+      val in         = manifestRead(tableSchema, files.map(a => (a.path, a.size)))
       val out =
         if (clusterBy.nonEmpty)
           in.repartitionByRange(nOut, clusterBy.map(org.apache.spark.sql.functions.col): _*)
@@ -686,27 +685,46 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   // test hook: I/O accounting for rebuild-cost assertions
   private[graft] def logReader: DeltaLogReader = reader
 
-  // memoized per log length: folding the commit log costs a Spark job
+  // the folded log as of version `_1` (-1: empty log); None until first use
   private var snapshotMemo: Option[(Long, Option[TxLog])] = None
 
-  private def snapshotLog(): Option[TxLog] = {
+  /** The folded commit log as of its latest version, advanced in place:
+    * when the log grew by contiguous commits past the memo, only those are
+    * parsed and folded onto it in commit order — the same left fold
+    * `TxLog.coalesce` that [[DeltaLogReader.fullSnapshot]] performs, so a
+    * steady-state read costs one LIST plus the new commits. A fresh handle,
+    * a gap, or a log below the memo rebuilds from checkpoint + trailing
+    * commits — as of the listed version, so a commit landing meanwhile is
+    * folded by the next call, never twice.
+    */
+  private def snapshotState(): (Long, Option[TxLog]) = {
     val commits = reader.listCommits()
-    val key     = if (commits.isEmpty) -1L else commits.last._1
-    snapshotMemo match {
-      case Some((k, s)) if k == key => s
-      case _ =>
-        val s = reader.fullSnapshot() // checkpoint-bootstrapped when available
-        snapshotMemo = Some((key, s))
-        s
+    val key     = commits.lastOption.fold(-1L)(_._1)
+    val next = snapshotMemo match {
+      case Some(memo @ (k, _)) if k == key => memo
+      case Some((k, s)) if k < key && commits.count(_._1 > k) == key - k =>
+        val logs = s.toSeq ++ reader.readCommits(commits.filter(_._1 > k))
+        (key, if (logs.isEmpty) None else Some(TxLog.coalesce(logs)))
+      case _ if key >= 0 => (key, reader.snapshotAsOf(key))
+      case _ => // no commit JSONs: the last checkpoint, if any, is the table
+        (key, reader.readLastCheckpoint().map(c => reader.readCheckpoint(c.version, startTxId = 0L)))
     }
+    snapshotMemo = Some(next)
+    next
   }
+
+  private def snapshotLog(): Option[TxLog] = snapshotState()._2
 
   /** Checkpoint the sink's own commit log every `CheckpointEvery` commits so
     * snapshot replay stays O(live files + recent commits) on long-lived
-    * mirrors (the same O1/O10 treatment the source log gets).
+    * mirrors (the same O1/O10 treatment the source log gets). The state
+    * written is the snapshot memo, advanced past the commit just made.
     */
   private def maybeCheckpoint(version: Long): Unit =
-    if (version > 0 && version % CheckpointEvery == 0) writer.writeCheckpoint(name)
+    if (version > 0 && version % CheckpointEvery == 0) {
+      val (latest, state) = snapshotState()
+      state.foreach(writer.writeCheckpoint(_, latest))
+    }
 }
 
 object MirrorTable {

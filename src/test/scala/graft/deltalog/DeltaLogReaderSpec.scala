@@ -1,10 +1,13 @@
 package graft.deltalog
 
+import java.time.Instant
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.input_file_name
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
-import graft.txlog.{TxAction, TxState}
+import graft.txlog.{TransactionItem, TxAction, TxLog, TxState}
 
 class DeltaLogReaderSpec extends SparkSuite {
   import spark.implicits._
@@ -252,5 +255,141 @@ class DeltaLogReaderSpec extends SparkSuite {
     val batch  = reader.nextBatch(None).get
     assert(batch.adds.size == 1)
     assert(batch.startTxId == 0L && batch.endTxId == 2L)
+  }
+
+  // ---- driver-side commit parse ------------------------------------------
+  //
+  // The oracle is the job-based reader the driver parse replaced:
+  // `spark.read.json` with the action schema and a PERMISSIVE corrupt-record
+  // column, rows mapped through the checkpoint path's row mapping. Every
+  // commit of every log must yield the same items; every record the JSON
+  // source marks corrupt must be refused.
+
+  private def oracle(reader: DeltaLogReader, commits: Seq[(Long, Path)]): Map[Long, Seq[TransactionItem]] = {
+    val byFile = commits.map { case (tx, p) => p.getName -> tx }.toMap
+    val rows = spark.read
+      .schema(DeltaLogReader.ActionSchema.add("_corrupt", StringType))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt")
+      .json(commits.map(_._2.toUri.toString): _*)
+      .withColumn("_file", input_file_name())
+      .collect()
+    assert(rows.forall(_.isNullAt(rows.head.fieldIndex("_corrupt"))))
+    rows.toSeq
+      .groupBy(r => byFile(new Path(r.getAs[String]("_file")).getName))
+      .map { case (tx, rs) => tx -> rs.flatMap(reader.rowItems(_, tx, tx)) }
+  }
+
+  private def stable(items: Seq[TransactionItem]) = items.map(_.copy(mirrorTimestamp = Instant.EPOCH))
+
+  private def assertMatchesOracle(dir: String, name: String): Int = {
+    val reader  = new DeltaLogReader(spark, dir, name)
+    val commits = reader.listCommits()
+    val want    = oracle(reader, commits)
+    val got     = reader.readCommits(commits)
+    assert(got.map(_.startTxId) == commits.map(_._1).filter(tx => want(tx).nonEmpty))
+    got.foreach(l => assert(stable(l.allItems) == stable(TxLog(want(l.startTxId)).allItems)))
+    got.size
+  }
+
+  test("driver parse equals the spark.read.json oracle on fixture and sink logs") {
+    // source fixture: partitioned metadata, adds with stats, a remove with
+    // and one without partition values, non-engine action lines
+    val src = tmpDir("parse-src")
+    val fx  = new TestDelta(spark, src, "src")
+    fx.init(idSchema, Seq("year"))
+    val f0 = fx.addCommit(spark.range(5).toDF("id"), Map("year" -> "1994"))
+    val f1 = fx.addCommit(spark.range(5, 8).toDF("id"), Map("year" -> "1995"))
+    fx.replaceCommit(f0, spark.range(1, 5).toDF("id"), Map("year" -> "1994"))
+    fx.removeCommit(f1)
+    fx.writer.commit(Seq(
+      """{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Append"}}}""",
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      """{"txn":{"appId":"app","version":3,"lastUpdated":1700000000000}}""",
+      """{"add":{"path":"x.parquet","partitionValues":{"year":null},"size":7,""" +
+        """"modificationTime":1,"dataChange":true,"stats":"{\"numRecords\":2}",""" +
+        """"tags":{"k":"v","n":3}}}"""))
+    fx.writer.commit(Seq("""{"commitInfo":{"operation":"VACUUM END"}}"""))
+    assert(assertMatchesOracle(src, "src") == 6)
+
+    // the mirror sink's own log: lineage + stats tags, delete rewrites
+    val sinkDir = tmpDir("parse-sink")
+    val t = new graft.sink.MirrorTable(spark, sinkDir, "sink")
+    t.ensureSchema(idSchema, Nil)
+    (1 to 3).foreach { i =>
+      t.stage(s"b$i", "g0", spark.range(i * 10L, i * 10L + 4).toDF("id")
+        .withColumn(graft.types.KustoTypes.BlobPathColumn,
+          org.apache.spark.sql.functions.lit(s"blob-$i"))
+        .withColumn(graft.types.KustoTypes.IngestTsColumn,
+          org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L))))
+      t.publishStaged(s"b$i", statsColumns = Seq("id"))
+    }
+    t.deleteByLineage(Seq(("blob-2", None)), statsColumns = Seq("id"))
+    assert(assertMatchesOracle(sinkDir, "sink") == 5)
+
+    // the synthetic 10⁶-scale layout's trailing commits
+    val ms = tmpDir("parse-ms")
+    graft.tools.MetaScale.writeSyntheticLog(spark, ms, n = 10, trailingCommits = 3, addsPerCommit = 7)
+    assert(assertMatchesOracle(ms, "ms") == 3)
+  }
+
+  test("wrong-typed fields, non-object lines and blank files are refused") {
+    val dir    = tmpDir("parse-bad")
+    val fx     = new TestDelta(spark, dir, "bad")
+    fx.init(idSchema)
+    val logDir = new Path(dir, "_delta_log")
+    val fs     = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val commit = new Path(logDir, f"${1L}%020d.json")
+    def put(body: String): Unit = {
+      val out = fs.create(commit, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    val reader = new DeltaLogReader(spark, dir, "bad")
+    def refusal(body: String): String = {
+      put(body)
+      intercept[IllegalStateException](reader.readCommits(reader.listCommits())).getMessage
+    }
+    def corruptInOracle(body: String): Boolean = {
+      put(body)
+      spark.read.schema(DeltaLogReader.ActionSchema.add("_corrupt", StringType))
+        .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", "_corrupt")
+        .json(commit.toString).collect().exists(r => !r.isNullAt(r.fieldIndex("_corrupt")))
+    }
+
+    // a string where add.size holds a long: the JSON source marks the
+    // record corrupt, so the driver parse must refuse it too
+    val badSize = """{"add":{"path":"a.parquet","partitionValues":{},"size":"12",""" +
+      """"modificationTime":1,"dataChange":true}}"""
+    assert(corruptInOracle(badSize))
+    val e1 = refusal(badSize)
+    assert(e1.contains("Corrupt Delta commit JSON") && e1.contains("size"), e1)
+    val badStruct = """{"add":5}"""
+    assert(corruptInOracle(badStruct))
+    assert(refusal(badStruct).contains("Corrupt Delta commit JSON"))
+
+    // lines that are not JSON objects
+    Seq("42", "\"add\"", "[1,2]", "{\"add\":").foreach { line =>
+      val e = refusal(s"""{"commitInfo":{}}\n$line\n""")
+      assert(e.contains("Corrupt Delta commit JSON"), s"$line: $e")
+    }
+
+    // blank and whitespace-only files are torn writes, not empty commits
+    Seq("", "\n", "  \n\t\n").foreach { body =>
+      val e = refusal(body)
+      assert(e.contains("contains no JSON records"), s"'$body': $e")
+    }
+  }
+
+  test("a one-commit poll parses the log without a Spark job") {
+    val dir = tmpDir("parse-jobs")
+    val fx  = new TestDelta(spark, dir, "jobs")
+    fx.init(idSchema)
+    fx.addCommit(spark.range(3).toDF("id"))
+    val reader  = new DeltaLogReader(spark, dir, "jobs")
+    val applied = reader.nextBatch(None).get
+    fx.addCommit(spark.range(3, 6).toDF("id"))
+    val (batch, jobs) = jobsDuring(reader.nextBatch(Some(applied)))
+    assert(batch.exists(b => b.startTxId == 2L && b.adds.size == 1))
+    assert(jobs == 0, s"nextBatch launched $jobs Spark job(s)")
   }
 }

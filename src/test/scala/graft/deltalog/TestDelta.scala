@@ -66,5 +66,12 @@ class TestDelta(spark: SparkSession, val dir: String, name: String = "src") {
     rel
   }
 
-  def checkpoint(numParts: Int = 1): Long = writer.writeCheckpoint(name, numParts)
+  /** Checkpoint the latest commit, from the latest checkpoint plus its
+    * trailing commits.
+    */
+  def checkpoint(numParts: Int = 1): Long = {
+    val reader  = new DeltaLogReader(spark, dir, name)
+    val version = reader.listCommits().last._1
+    writer.writeCheckpoint(reader.snapshotAsOf(version).get, version, numParts)
+  }
 }

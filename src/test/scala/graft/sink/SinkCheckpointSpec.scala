@@ -19,15 +19,17 @@ class SinkCheckpointSpec extends SparkSuite {
   private val schema = StructType(Seq(StructField("id", LongType)))
   private val ts     = new Timestamp(1700000000000L)
 
-  private def publishN(t: MirrorTable, n: Int): Unit =
-    (1 to n).foreach { i =>
-      t.stage(s"b$i", "g0",
-        spark.range(i * 10L, i * 10L + 5).toDF("id")
-          .withColumn(KustoTypes.BlobPathColumn, lit(s"blob-$i"))
-          .withColumn(KustoTypes.IngestTsColumn, lit(ts))
-          .repartition(1))
-      assert(t.publishStaged(s"b$i") == i.toLong)
-    }
+  private def publishN(t: MirrorTable, n: Int): Unit = (1 to n).foreach(publishOne(t, _))
+
+  /** Publish batch `i` (5 rows of source blob `blob-i`) as commit `i`. */
+  private def publishOne(t: MirrorTable, i: Int): Unit = {
+    t.stage(s"b$i", "g0",
+      spark.range(i * 10L, i * 10L + 5).toDF("id")
+        .withColumn(KustoTypes.BlobPathColumn, lit(s"blob-$i"))
+        .withColumn(KustoTypes.IngestTsColumn, lit(ts))
+        .repartition(1))
+    assert(t.publishStaged(s"b$i") == i.toLong)
+  }
 
   test("tag rebuild opens only the latest checkpoint + trailing commits; delete stays exact") {
     val dir = tmpDir("sink-ckpt")
@@ -95,5 +97,48 @@ class SinkCheckpointSpec extends SparkSuite {
     t2.deleteByLineage(Seq(("blob-2", None)))
     assert(t2.snapshot().count() == before - 5)
     assert(t2.snapshot().filter(col(KustoTypes.BlobPathColumn) === "blob-2").count() == 0)
+  }
+
+  test("a long-lived handle advances its snapshot by the new commits only") {
+    val dir = tmpDir("sink-incr")
+    val t1  = new MirrorTable(spark, dir, "t")
+    // after every commit the long-lived handle must equal a fresh handle's
+    // rebuild (checkpoint + trailing commits) — same files, in the same
+    // order — having parsed each commit file exactly once
+    def check(step: String): Unit = {
+      val fresh = new MirrorTable(spark, dir, "t")
+      assert(t1.liveAdds() == fresh.liveAdds(), s"$step: live files differ")
+      assert(t1.currentMeta() == fresh.currentMeta(), s"$step: metadata differs")
+      val v = t1.currentVersion()
+      assert(t1.logReader.commitFilesRead.get == v + 1,
+        s"$step: ${t1.logReader.commitFilesRead.get} commit reads for ${v + 1} commits")
+      assert(t1.logReader.checkpointsLoaded.get == 0L, s"$step: memo was rebuilt")
+    }
+    t1.ensureSchema(schema, Nil)
+    check("schema")
+    (1 to 25).foreach { i =>
+      publishOne(t1, i)
+      check(s"publish $i")
+    }
+    val ckpts = new java.io.File(s"$dir/_delta_log").list().filter(_.endsWith(".checkpoint.parquet"))
+    assert(ckpts.sorted.toSeq == Seq(10L, 20L).map(v => f"$v%020d.checkpoint.parquet"))
+    assert(t1.deleteByLineage(Seq(("blob-3", None))) == 26L)
+    check("delete")
+    assert(t1.optimize() == 27L)
+    check("optimize")
+    t1.ensureSchema(schema.add("extra", "string"), Nil)
+    assert(t1.currentVersion() == 28L)
+    check("schema change")
+    assert(t1.snapshot().count() == 24 * 5)
+  }
+
+  test("a read right after a publish runs no Spark job to resolve the snapshot") {
+    val dir = tmpDir("sink-jobs")
+    val t   = new MirrorTable(spark, dir, "t")
+    t.ensureSchema(schema, Nil)
+    publishN(t, 3)
+    val (df, jobs) = jobsDuring(t.snapshot())
+    assert(jobs == 0, s"snapshot() launched $jobs Spark job(s)")
+    assert(df.count() == 15)
   }
 }
