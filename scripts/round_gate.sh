@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # One-command replica of the driver's per-round gates:
-#   compile + test, correctness dump + DuckDB hash-compare, bench JSON.
+#   compile + test, perfbench self-test, correctness dump + DuckDB
+#   hash-compare, bench JSON.
 # Usage: scripts/round_gate.sh [sf_dir_correctness] [sf_dir_bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -11,6 +12,11 @@ OUT=/tmp/verify_out
 
 echo "== compile + test =="
 sbt -batch test | tail -4
+
+echo "== perfbench self-test (tiny sizes: mirror-equals-source + fault injection) =="
+# drives the mirror engine the way BENCHMARK.json's runs do, on the same
+# scalac-built classes, so a change that breaks the benchmark fails here
+python3 perfbench/tests/test_perfbench.py
 
 echo "== correctness dump @ $SF_CORRECT =="
 rm -rf "$OUT"

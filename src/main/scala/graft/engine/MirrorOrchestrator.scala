@@ -69,7 +69,7 @@ final case class MirrorConfig(
 }
 
 /** The control plane: discover new Delta commits, persist them as state rows,
-  * and drive each batch through analyze → stage → load → drop-staging with
+  * and drive each batch through analyze → stage → load → close with
   * every transition checkpointed — crash-resumable at stage granularity.
   *
   * Reference: Orchestrations/DeltaTableOrchestration.cs (§3.1-3.2),
@@ -126,11 +126,25 @@ class MirrorOrchestrator(
     }
     s.conf.set("spark.sql.files.openCostInBytes", (64L * 1024).toString)
   }
-  // status() re-reads + lastWins-folds the WHOLE store — the per-poll O(n)
-  // constant that dominates large-file-count batches; timed so the
-  // metadata-plane record can show it (orch.status CONTAINS store.read)
+  // the table's state read from the store (orch.status CONTAINS store.read)
   private def status(): TableStatus = graft.util.PhaseTimer.time("orch.status") {
     TableStatus.fromStore(store, config.mirrorTableName)
+  }
+
+  // The poll's status: read ONCE per poll, then advanced from this
+  // orchestrator's own appends — no step re-reads rows the poll just wrote
+  // (a traced trickle made 120 store reads over 12 polls before, 24 after).
+  @volatile private var held = TableStatus(config.mirrorTableName, Nil)
+  private[graft] def heldStatus: TableStatus = held
+
+  /** Every state write goes through here: append, then advance `held` to the
+    * store's own post-append fold of this table. The lock pairs each append
+    * with its advance across the staging workers, so `held` is always the
+    * last append's view; a dropped cache falls back to one re-read.
+    */
+  private def write(items: Seq[TransactionItem]): Unit = if (items.nonEmpty) synchronized {
+    held = store.append(items).flatMap(_.get(config.mirrorTableName))
+      .map(TableStatus(config.mirrorTableName, _)).getOrElse(status())
   }
 
   /** One poll: discover + persist new logs, then drain incomplete batches
@@ -147,26 +161,17 @@ class MirrorOrchestrator(
     // only the O(1) garbage-ratio probe (plus append's segment bound).
     if (!openCompacted) { store.compact(); openCompacted = true }
     else store.compactIfNeeded(config.compactGarbageRatio)
+    // the poll's one store read: any change another writer made between
+    // polls (a crash, a hand-appended batch) is seen here
+    held = status()
     var processed = 0
-    var st        = status()
-
-    // resume any incomplete batch first (crash recovery)
-    while (st.isBatchIncomplete) {
-      processBatch(st, st.earliestIncompleteBatchTxId.get)
-      processed += 1
-      st = status()
-    }
-    // then discover new commits
-    var discovered = discoverNext(st)
-    while (discovered) {
-      st = status()
-      while (st.isBatchIncomplete) {
-        processBatch(st, st.earliestIncompleteBatchTxId.get)
+    // resume any incomplete batch first (crash recovery), then drain new ones
+    do {
+      while (held.isBatchIncomplete) {
+        processBatch(held.earliestIncompleteBatchTxId.get)
         processed += 1
-        st = status()
       }
-      discovered = discoverNext(st)
-    }
+    } while (discoverNext())
     // maintenance AFTER the drain — no staging is in flight for this table
     // at this point. Only after real work: batches are the only producer of
     // small files and tombstones, and an idle continuous poll (every 5 s)
@@ -222,8 +227,8 @@ class MirrorOrchestrator(
     * state, persist its items as `Initial` (PersistNewLogsAsync,
     * DeltaTableOrchestration.cs:337-351).
     */
-  private def discoverNext(st: TableStatus): Boolean = graft.util.PhaseTimer.time("orch.discover") {
-    val applied = st.getHistorical(Long.MaxValue)
+  private def discoverNext(): Boolean = graft.util.PhaseTimer.time("orch.discover") {
+    val applied = held.getHistorical(Long.MaxValue)
     reader.nextBatch(applied) match {
       case None => false
       case Some(batch) =>
@@ -237,29 +242,25 @@ class MirrorOrchestrator(
           internalState = InternalState(
             stagingTableName = Some(s"staging-${batch.startTxId}-${batch.endTxId}-" +
               java.util.UUID.randomUUID().toString.take(8))))
-        store.append(batch.allItems :+ stagingItem)
+        write(batch.allItems :+ stagingItem)
         true
     }
   }
 
   // ---- the per-batch pipeline (§3.2) --------------------------------------
 
-  private def processBatch(st: TableStatus, startTxId: Long): Unit = {
-    val batch = st.getBatch(startTxId)
-
+  private def processBatch(startTxId: Long): Unit = {
     // 1. landing table schema (tx 0 or schema-change metadata)
-    batch.metadata match {
+    held.getBatch(startTxId).metadata match {
       case Some(m) if m.state != TxState.Done =>
         val schema = KustoTypes.structFrom(m.schema.getOrElse(Seq.empty))
         mirror.ensureSchema(schema, m.partitionColumns.getOrElse(Seq.empty))
-        store.append(Seq(m.withState(TxState.Done, now())))
+        write(Seq(m.withState(TxState.Done, now())))
       case _ =>
     }
-    // re-read to keep stage transitions monotonic
-    analyze(status().getBatch(startTxId))
-    stageAdds(status(), startTxId)
-    load(status(), startTxId)
-    dropStaging(status().getBatch(startTxId))
+    analyze(startTxId)
+    stageAdds(startTxId)
+    load(startTxId)
   }
 
   /** Stage 2 — analyze (BlobAnalysisOrchestration.cs:67-134): evaluate the
@@ -267,12 +268,13 @@ class MirrorOrchestrator(
     * one Spark job for all tuples, the reference's one-KQL-round-trip
     * batching), apply the go-back retention skip (P7/O5), persist Analyzed.
     */
-  private def analyze(batch: TxLog): Unit = graft.util.PhaseTimer.time("orch.analyze") {
-    val todo = batch.adds.filter(_.state == TxState.Initial) // P6
+  private def analyze(startTxId: Long): Unit = graft.util.PhaseTimer.time("orch.analyze") {
+    val batch = held.getBatch(startTxId)
+    val todo  = batch.adds.filter(_.state == TxState.Initial) // P6
     if (todo.isEmpty) return
 
     val pcols = batch.metadata.flatMap(_.partitionColumns)
-      .orElse(status().getTableDefinition(batch.startTxId).map(_._2))
+      .orElse(held.getTableDefinition(startTxId).map(_._2))
       .getOrElse(Seq.empty)
 
     val creationTimes: Map[Map[String, String], Instant] = config.creationTimeExpr match {
@@ -311,7 +313,7 @@ class MirrorOrchestrator(
         mirrorTimestamp = now(),
         internalState = a.internalState.copy(creationTime = ct))
     }
-    store.append(analyzed)
+    write(analyzed)
   }
 
   /** Stage 3 — staging (BlobStagingOrchestration.cs:81-138): empty files go
@@ -321,22 +323,22 @@ class MirrorOrchestrator(
     * never read from parquet. Lineage (`MLK_BlobPath`) comes from
     * `input_file_name()`; `MLK_IngestTs` pins this ingest instance.
     */
-  private def stageAdds(st: TableStatus, startTxId: Long): Unit =
+  private def stageAdds(startTxId: Long): Unit =
       graft.util.PhaseTimer.time("orch.stage") {
-    val batch = st.getBatch(startTxId)
+    val batch = held.getBatch(startTxId)
     val stagingName = batch.stagingTable
       .flatMap(_.internalState.stagingTableName)
       .getOrElse(s"staging-$startTxId")
 
     val empty = batch.adds.filter(a => a.state == TxState.Analyzed && a.recordCount.contains(0L))
     if (empty.nonEmpty)
-      store.append(empty.map(_.withState(TxState.Done, now())))
+      write(empty.map(_.withState(TxState.Done, now())))
 
     val todo = batch.adds.filter(a =>
       a.state == TxState.Analyzed && !a.recordCount.contains(0L))
     if (todo.isEmpty) return
 
-    val (schema, pcols) = st.getTableDefinition(startTxId)
+    val (schema, pcols) = held.getTableDefinition(startTxId)
       .getOrElse(throw new IllegalStateException(
         s"No schema known at tx $startTxId for ${config.mirrorTableName}"))
     val physicalSchema = StructType(schema.fields.filterNot(f => pcols.contains(f.name)))
@@ -394,7 +396,7 @@ class MirrorOrchestrator(
         .select(KustoTypes.withTrackingColumns(schema).fields.map(f => col(f.name)).toIndexedSeq: _*)
 
       graft.util.PhaseTimer.time("mirror.stage")(mirror.stage(stagingName, groupId, df))
-      store.append(adds.map(a => a.copy(
+      write(adds.map(a => a.copy(
         state = TxState.Staged,
         mirrorTimestamp = now(),
         internalState = a.internalState.copy(ingestionTime = Some(ingestTs.toInstant.toString)))))
@@ -402,13 +404,18 @@ class MirrorOrchestrator(
   }
 
   /** Stage 5 — load (BlobLoadingOrchestration.cs): publish staged files
-    * atomically (O11) and mark adds Done; resolve removes against historical
-    * adds (J3 — a remove of a Skipped add is itself Skipped; a remove with no
-    * matching past add is a hard error), then delete by pinned lineage (O12).
+    * atomically (O11); resolve removes against historical adds (J3 — a
+    * remove of a Skipped add is itself Skipped; a remove with no matching
+    * past add is a hard error), then delete by pinned lineage (O12).
+    * Stage 6 — close (S13): adds Done, removes Done/Skipped and staging
+    * Done land in ONE append (staged files ARE the published files, so
+    * there is nothing to drop). A crash before it leaves the adds Staged and
+    * resume re-runs load: publish skips files already live, and no live file
+    * still carries the doomed (blob, ingest ts) rows.
     */
-  private def load(st: TableStatus, startTxId: Long): Unit =
+  private def load(startTxId: Long): Unit =
       graft.util.PhaseTimer.time("orch.load") {
-    val batch = st.getBatch(startTxId)
+    val batch = held.getBatch(startTxId)
     val stagingName = batch.stagingTable
       .flatMap(_.internalState.stagingTableName)
       .getOrElse(s"staging-$startTxId")
@@ -419,23 +426,21 @@ class MirrorOrchestrator(
       if (!mirror.stagingExists(stagingName)) {
         // reset path (DeltaTableOrchestration.cs:181-200): staging vanished
         // mid-batch — send the adds back to Analyzed and re-stage.
-        store.append(toLoad.map(_.withState(TxState.Analyzed, now())))
-        stageAdds(status(), startTxId)
+        write(toLoad.map(_.withState(TxState.Analyzed, now())))
+        stageAdds(startTxId)
       }
       val pvByGroup = batch.adds
         .map(_.partitionValues.getOrElse(Map.empty[String, String])).distinct
         .map(pv => MirrorOrchestrator.groupId(pv) -> pv).toMap
       graft.util.PhaseTimer.time("mirror.publish")(
         mirror.publishStaged(stagingName, pvByGroup, config.statsColumns))
-      store.append(status().getBatch(startTxId).adds
-        .filter(_.state == TxState.Staged).map(_.withState(TxState.Done, now())))
     }
 
     // resolve + apply removes
     val toRemove = batch.removes.filterNot(r =>
       r.state == TxState.Done || r.state == TxState.Skipped)
-    if (toRemove.nonEmpty) {
-      val historicalAdds = st.getHistorical(startTxId).map(_.adds).getOrElse(Seq.empty)
+    val removed = if (toRemove.isEmpty) Nil else {
+      val historicalAdds = held.getHistorical(startTxId).map(_.adds).getOrElse(Seq.empty)
       val historical     = historicalAdds.flatMap(a => a.blobPath.map(_ -> a)).toMap
       val resolved = toRemove.map { r =>
         val path = r.blobPath.getOrElse(
@@ -454,20 +459,14 @@ class MirrorOrchestrator(
         }
         mirror.deleteByLineage(doomed, config.statsColumns, config.ingestParallelism)
       }
-      store.append(
-        skippedPairs.map(_._1.withState(TxState.Skipped, now())) ++
-          livePairs.map(_._1.withState(TxState.Done, now())))
+      skippedPairs.map(_._1.withState(TxState.Skipped, now())) ++
+        livePairs.map(_._1.withState(TxState.Done, now()))
     }
-  }
 
-  /** Stage 6 — close the staging area (S13). Unlike the reference's
-    * `.drop table`, staged files ARE the published files (publish is
-    * metadata-only), so closing is just the terminal state transition.
-    */
-  private def dropStaging(batch: TxLog): Unit = {
-    batch.stagingTable.filter(_.state != TxState.Done).foreach { stg =>
-      store.append(Seq(stg.withState(TxState.Done, now())))
-    }
+    val closing = held.getBatch(startTxId) // re-staged adds included
+    def done(items: Seq[TransactionItem]) = items.map(_.withState(TxState.Done, now()))
+    write(done(closing.adds.filter(_.state == TxState.Staged)) ++ removed ++
+      done(closing.stagingTable.filter(_.state != TxState.Done).toSeq))
   }
 
   /** The mirrored table for queries. */

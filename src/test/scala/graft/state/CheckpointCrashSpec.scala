@@ -201,25 +201,30 @@ class CheckpointCrashSpec extends SparkSuite {
     }
   }
 
-  test("mirror resume after a crash at EVERY store write point: exact rows, no duplicates") {
-    // systematic sweep: batch 1 mirrors cleanly, then batch 2's poll —
-    // whose opening compaction folds batch 1's segments (the commit.*
-    // points) and whose batch pipeline appends segments (the segment.*
-    // points) — is killed at the k-th firing of each fault point; a
-    // fresh-process resume must land the table at EXACTLY batch1+batch2.
+  /** Systematic sweep: batch 1 mirrors cleanly, then batch 2's poll —
+    * whose opening compaction folds batch 1's segments (the commit.*
+    * points) and whose batch pipeline appends segments (the segment.*
+    * points) — is killed at the k-th firing of each fault point; a
+    * fresh-process resume must land the table at EXACTLY batch1+batch2.
+    * A clean batch-2 poll fires each segment point exactly 4 times
+    * (discover, analyze, one staged group, close): that pins the crash
+    * granularity. With `removeInBatch2`, batch 2 also removes a batch-1
+    * file, so its closing append carries adds-Done, removes-Done and
+    * staging-Done together.
+    */
+  private def sweepBatch2(variant: String, removeInBatch2: Boolean): Unit = {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType)))
-    val minPoints = Map(
-      "segment.pre-commit" -> 4, "segment.committed" -> 4,
-      "commit.backup-done" -> 1, "commit.swap-done" -> 1)
-    for (point <- minPoints.keys.toSeq.sorted) {
-      var k    = 1
-      var done = false
-      while (!done) {
-        val name = s"crash-$point-$k".replace('.', '_')
+    for (point <- Seq("commit.backup-done", "commit.swap-done",
+        "segment.committed", "segment.pre-commit")) {
+      var k       = 1
+      var firings = -1
+      while (firings < 0) {
+        val name = s"crash-$variant-$point-$k".replace('.', '_')
         val src  = new TestDelta(spark, tmpDir(s"src-$name"), name)
         src.init(schema)
         src.addCommit(spark.range(10).toDF("id"))
+        val doomed = src.addCommit(spark.range(100, 105).toDF("id"))
         val cfg = MirrorConfig(
           deltaTableUrl = src.dir,
           mirrorDir = tmpDir(s"mirror-$name"),
@@ -228,25 +233,36 @@ class CheckpointCrashSpec extends SparkSuite {
           ingestParallelism = 1) // deterministic commit ordering for the sweep
         new MirrorOrchestrator(spark, cfg).runOnce() // batch 1, clean
         src.addCommit(spark.range(10, 15).toDF("id"))
+        if (removeInBatch2) src.removeCommit(doomed)
+        val expected = (0L until 15L) ++ (if (removeInBatch2) Nil else (100L until 105L))
         crashAt(point, k)
         val crashed =
           try { new MirrorOrchestrator(spark, cfg).runOnce(); false }
           catch { case _: SimulatedCrash => true }
         clearHook()
-        if (!crashed) done = true // fewer than k firings in a clean poll — swept all
+        if (!crashed) firings = k - 1 // fewer than k firings in a clean poll — swept all
         else {
           CheckpointStore.invalidateCache() // fresh-process resume
           val resumed = new MirrorOrchestrator(spark, cfg)
           resumed.runOnce()
           val got = resumed.table.snapshot().select("id").collect()
             .map(_.getLong(0)).sorted.toSeq
-          assert(got == (0L until 15L),
-            s"crash at $point #$k: resumed mirror rows $got (duplicates or loss)")
+          assert(got == expected,
+            s"crash at $point #$k ($variant): resumed mirror rows $got (duplicates or loss)")
         }
         k += 1
       }
-      assert(k > minPoints(point),
-        s"sweep for $point exercised too few write points (${k - 1})")
+      if (point.startsWith("segment."))
+        assert(firings == 4, s"a clean batch-2 poll ($variant) fired $point $firings times, not 4")
+      else assert(firings >= 1, s"sweep for $point ($variant) exercised no write point")
     }
+  }
+
+  test("mirror resume after a crash at EVERY store write point: exact rows, no duplicates") {
+    sweepBatch2("add", removeInBatch2 = false)
+  }
+
+  test("crash at EVERY store write point of a batch that also removes: exact rows") {
+    sweepBatch2("rm", removeInBatch2 = true)
   }
 }

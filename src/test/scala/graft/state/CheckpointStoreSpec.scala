@@ -46,6 +46,28 @@ class CheckpointStoreSpec extends SparkSuite {
     assert(store.readAll().toSet == Set(a2, b))
   }
 
+  test("append hands back each table's folded view, None when the store changed under it") {
+    val dir   = tmpDir("ckpt-appendview")
+    val store = new CheckpointStore(spark, dir)
+    val a  = fullItem.copy(tableName = "t1", blobPath = Some("a.parquet"))
+    val b  = fullItem.copy(tableName = "t2", blobPath = Some("b.parquet"))
+    val a2 = a.withState(TxState.Done, T0.plusSeconds(5))
+    assert(store.append(Seq(a, b)).contains(Map("t1" -> Vector(a), "t2" -> Vector(b))))
+    val view = store.append(Seq(a2, a.copy(blobPath = Some("c.parquet")))).get
+    CheckpointStore.invalidateCache() // the view must equal a fresh parse
+    assert(view.keySet == Set("t1", "t2"))
+    view.foreach { case (t, items) => assert(items == store.readTable(t), t) }
+
+    // a segment this store's cache never saw: the append cannot extend the
+    // cached parse, so it hands back nothing and the caller re-reads
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "index.csv.seg-000099-elsewhere"),
+      (CheckpointStore.Header + "\n" + CheckpointStore.toCsvLine(b.withState(TxState.Done, T0)) +
+        "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(store.append(Seq(a.withState(TxState.Skipped, T0))).isEmpty)
+    assert(store.readTable("t2") == Seq(b.withState(TxState.Done, T0)))
+  }
+
   test("concurrent appenders/compactors through two store instances lose nothing") {
     // the multi-table + parallel-staging write pattern: several threads,
     // SEPARATE CheckpointStore instances on one index path (the JVM-global
