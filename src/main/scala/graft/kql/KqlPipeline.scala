@@ -3,6 +3,7 @@ package graft.kql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftManifestScan
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.functions.KqlCompat
@@ -1406,9 +1407,9 @@ object KqlPipeline {
     val structType = org.apache.spark.sql.types.StructType.fromDDL(ddl)
     fmt match {
       case "parquet" =>
-        // parquet is self-describing: read natively (stats/pushdown intact),
-        // then project+cast to the declared shape
-        spark.read.parquet(paths: _*)
+        // parquet is self-describing: read natively with the first path's
+        // footer schema (stats/pushdown intact), then project+cast to the declared shape
+        spark.read.schema(GraftManifestScan.footerSchema(spark, paths.head)).parquet(paths: _*)
           .select(schema.map { case (n, t) => col(n).cast(t).as(n) }: _*)
       case "csv" =>
         spark.read.schema(structType).option("header", header.toString).csv(paths: _*)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftManifestScan
 
 import graft.functions.{DedupFunctions, KqlCompat, Multimodal, SimilarityFunctions, TextFunctions}
 import graft.functions.expressions.BloomContains
@@ -32,7 +33,8 @@ object Surface {
       headline: Boolean = false)
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = s.read.schema(GraftManifestScan.footerSchema(s, path)).parquet(path)
     // events.ts must be epoch-nanos LONG whatever the on-disk encoding
     if (name == "events") graft.util.EventTicks.toNanos(df) else df
   }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** Generic per-query adjudication instrument — the SpansProfile/KmeansProfile
   * pattern for ANY registry query, so a bench watch item costs one command
   * instead of a new tool per round: run the exact gated query `reps` times in
-  * one JVM against `dir` and print per-rep wall/gc plus per-JOB wall / summed
-  * executor task time / max single task / task count.
+  * one JVM against `dir` and print per-rep wall/gc/lowering plus per-JOB wall /
+  * task time / max task / task count; `lower` tags a job the lowering launched.
   *
   * Reads: a straggler task (maxTask ≫ run/tasks) names skew; wall ≫ execRun
   * names scheduling gaps or I/O waits; rep-1-only cost names warm-up; uniform
@@ -54,11 +54,10 @@ object QueryProfile {
     }
     def drainJobs(): Seq[(Int, Long, Long, Int, Long, Long, String)] = {
       import scala.jdk.CollectionConverters._
-      val t0 = jobStart.asScala.values.minOption.getOrElse(0L)
       val out = jobWallMs.asScala.toSeq.sortBy(_._1).map { case (job, wall) =>
         val stages = Option(stageOfJob.get(job)).map(_.asScala.toSeq).getOrElse(Nil)
         val aggs = stages.flatMap(s => Option(stageAgg.get(s)))
-        (job, Option(jobStart.get(job)).map(_ - t0).getOrElse(0L), wall,
+        (job, jobStart.getOrDefault(job, 0L), wall,
           aggs.map(_.tasks).sum, aggs.map(_.runMs).sum,
           aggs.map(_.maxTaskMs).maxOption.getOrElse(0L),
           Option(jobSite.get(job)).getOrElse(""))
@@ -102,16 +101,20 @@ object QueryProfile {
       timer.drainJobs()
       val g0 = gcMillis()
       val t0 = System.nanoTime()
-      val n  = fn(spark, dir).count()
+      val t0Ms = System.currentTimeMillis()
+      val df = fn(spark, dir)
+      val loweredMs = System.currentTimeMillis()
+      val n  = df.count()
       val wall = (System.nanoTime() - t0) / 1e9
       val gc   = (gcMillis() - g0) / 1e3
       walls += wall
       Thread.sleep(300) // listener bus drain
       val jobs = timer.drainJobs()
-      println(f"[rep $rep] wall=$wall%.3f s gc=$gc%.3f s rows=$n")
+      println(f"[rep $rep] wall=$wall%.3f s lower=${(loweredMs - t0Ms) / 1e3}%.3f s " +
+        f"lowerJobs=${jobs.count(_._2 < loweredMs)} gc=$gc%.3f s rows=$n")
       jobs.foreach { case (job, start, w, tasks, run, maxT, site) =>
-        println(f"  job=$job%3d t0=${start / 1e3}%7.3f wall=${w / 1e3}%7.3f s  tasks=$tasks%4d  " +
-          f"execRun=${run / 1e3}%8.3f s  maxTask=${maxT / 1e3}%7.3f s  $site")
+        println(f"  ${if (start < loweredMs) "lower" else "     "} job=$job%3d t0=${(start - t0Ms) / 1e3}%7.3f wall=${w / 1e3}%7.3f s  " +
+          f"tasks=$tasks%4d  execRun=${run / 1e3}%8.3f s  maxTask=${maxT / 1e3}%7.3f s  $site")
       }
     }
     val warmByTime = walls.result().drop(1)

@@ -1,11 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -29,9 +32,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * physical file fails the read loudly; stale-shorter manifests are the
   * log writer's contract to prevent.
   *
-  * This is the second (and only other) internal-API touchpoint after
-  * [[GraftColumnBridge]]: `FileIndex`/`HadoopFsRelation`/`Dataset.ofRows`
-  * are `private[sql]`-adjacent, kept to this one file.
+  * This file and [[GraftColumnBridge]] are the only internal-API touchpoints:
+  * `FileIndex`/`HadoopFsRelation`/`Dataset.ofRows` and the parquet footer
+  * reader of [[footerSchema]] are `private[sql]`-adjacent.
   */
 object GraftManifestScan {
 
@@ -83,5 +86,25 @@ object GraftManifestScan {
       fileFormat = new ParquetFileFormat,
       options = options)(session)
     Dataset.ofRows(session, LogicalRelation(relation))
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, from Spark's own footer read
+    * on the DRIVER, no job: a file's footer or a directory's first data file by
+    * name (`_`/`.` skipped). Fails naming `path`; never falls back to inference.
+    */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val state = spark.asInstanceOf[ClassicSession].sessionState
+    val conf  = state.newHadoopConf()
+    try {
+      val fs   = new Path(path).getFileSystem(conf)
+      val top  = fs.getFileStatus(new Path(path))
+      val file = if (!top.isDirectory) top else fs.listStatus(top.getPath)
+        .filter(f => f.isFile && !f.getPath.getName.matches("[_.].*")).minByOption(_.getPath.getName)
+        .getOrElse(throw new java.io.FileNotFoundException("directory holds no data file"))
+      val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter( // relations read every field as nullable
+        new Footer(file.getPath, meta), new ParquetToSparkSchemaConverter(state.conf)).asNullable
+    } catch { case scala.util.control.NonFatal(e) => throw new IllegalArgumentException(
+      s"no parquet schema for '$path': ${e.getMessage}", e) }
   }
 }
