@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, forcing full materialization via count(), and
@@ -21,16 +22,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.builder(s"local[$cpus]")
+      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024))
 
     // calibration anchor (r14 verdict #2): a fixed-work CPU probe stamped at
     // the start and end of the run lets bench_diff normalize per-query ratios

@@ -2,13 +2,14 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.deltalog.DeltaLogWriter
 import graft.engine.{MirrorConfig, MirrorOrchestrator}
 import graft.kql.KqlPipeline
 import graft.state.CheckpointStore
+import graft.util.Sessions
 
 /** Runnable demo of the KQL tabular surface — the reference's outward query
   * language — against a LIVE mirror: builds a small Delta source, mirrors
@@ -22,14 +23,7 @@ object KqlDemo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       Files.createTempDirectory("graft-kql-demo").toFile.getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("local[4]")
 
     // a two-commit Delta source, mirrored the normal way
     val srcDir = s"$work/source-delta"

@@ -2,9 +2,8 @@ package graft
 
 import java.time.{Instant, LocalDate, ZoneOffset}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.{MirrorConfig, MirrorOrchestration}
+import graft.util.Sessions
 
 /** CLI entry point — the Spark restatement of the reference's invocation
   * (README.md:12-14):
@@ -104,14 +103,10 @@ object Main {
             "[--optimize-every N] [--optimize-small-files M]")
         sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .appName(s"graft-mirror-${o.table}")
+    val spark = Sessions.start(Sessions.builder(
       // spark-submit injects the real master; default for bare runMain
-      .master(sys.props.getOrElse("spark.master", sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      sys.props.getOrElse("spark.master", sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]")))
+      .appName(s"graft-mirror-${o.table}"))
 
     val cfgs = o.specs.map { s =>
       MirrorConfig(

@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.deltalog.DeltaLogWriter
 import graft.engine.{MirrorConfig, MirrorOrchestrator}
+import graft.util.Sessions
 
 /** Runnable end-to-end demo of the mirror pipeline: builds a partitioned
   * Delta table with this library's own log writer, mirrors it, applies a
@@ -17,14 +17,7 @@ object MirrorDemo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       Files.createTempDirectory("graft-demo").toFile.getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("local[4]")
 
     val srcDir = s"$work/source-delta"
     val w      = new DeltaLogWriter(spark, srcDir)

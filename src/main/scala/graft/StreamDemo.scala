@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.EventStream
+import graft.util.Sessions
 
 /** Runnable streaming demo: drains the events table through the watermarked
   * window aggregation and the stateful sessionizer with
@@ -13,15 +13,7 @@ import graft.streaming.EventStream
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("local[4]")
 
     val dir  = java.nio.file.Files.createTempDirectory("stream-demo").toString
     graft.util.EventTicks.toNanos(spark.read.parquet(s"$src/events.parquet"))

@@ -1,24 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.util.Sessions
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, fullOutDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      // TIMESTAMP(NANOS) parquet reads as epoch-nanos long; a MICROS
-      // encoding is normalized by EventTicks.toNanos inside Surface.t
-      // (queries treat ts as ns and the oracles use epoch_ns semantics)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(s"local[$cpus]")
     // SPARK_GRAFT_ONLY=prefix1,prefix2 → targeted runs while iterating
     // (driver never sets it, so its runs always cover the full registry).
     // Partial dumps go to a SIBLING dir so stale parquet from an earlier

@@ -4,6 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.GraftManifestScan
 
 /** Persistent store for ANN index artifacts — PQ codebooks and IVF
   * (k-means) centroids.
@@ -117,7 +118,8 @@ object IndexStore {
 
   /** Read an artifact's (int keys…, double value) rows, or None if the dir
     * was never published. Index positions travel as data, so row order on
-    * disk is irrelevant.
+    * disk is irrelevant. The schema comes from the footer on the driver:
+    * inference would add a Spark job per artifact load.
     */
   private def loadNested(
       spark: SparkSession, dir: String, keyCols: Int): Option[Seq[(Seq[Int], Double)]] = {
@@ -125,7 +127,7 @@ object IndexStore {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
-      val df = spark.read.parquet(dir)
+      val df = spark.read.schema(GraftManifestScan.footerSchema(spark, dir)).parquet(dir)
       require(df.columns.length == keyCols + 1,
         s"index artifact at $dir has ${df.columns.length} columns, expected ${keyCols + 1}")
       Some(df.collect().toSeq.map { r =>

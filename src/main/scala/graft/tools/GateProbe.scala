@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.SimilarityFunctions
+import graft.util.Sessions
 
 /** Dev probe for calibrating the approximate-operator gates: prints per-query
   * recall@10 of the ANN paths vs the brute-force exact answer, and which
@@ -14,15 +15,7 @@ import graft.functions.SimilarityFunctions
 object GateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start("local[8]")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val q   = emb.filter(col("vec_id") < 5)

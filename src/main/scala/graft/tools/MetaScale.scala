@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.deltalog.{DeltaLogReader, DeltaLogWriter}
 import graft.engine.{MirrorConfig, MirrorOrchestrator}
 import graft.txlog.TxLog
+import graft.util.Sessions
 
 /** Metadata-plane scale proof (`MetaScale <workDir> [nCheckpoint] [nBlobs]`,
   * defaults 1,000,000 / 100,000): a 100 TB Delta table is not big ROWS on
@@ -95,14 +96,7 @@ object MetaScale {
     val nCkpt   = if (args.length > 1) args(1).toInt else 1000000
     val nBlobs  = if (args.length > 2) args(2).toInt else 100000
     val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(s"local[$cpus]")
     startHeapSampler()
 
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)

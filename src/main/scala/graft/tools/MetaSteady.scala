@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.time.Instant
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -12,6 +11,7 @@ import graft.deltalog.DeltaLogWriter
 import graft.engine.{MirrorConfig, MirrorOrchestrator}
 import graft.state.CheckpointStore
 import graft.txlog.{InternalState, TransactionItem, TxAction, TxState}
+import graft.util.Sessions
 
 /** Steady-state metadata-plane record (`MetaSteady <workDir> [ballastRows]
   * [steadyBatches] [controlBatches] [blobsPerBatch]`, defaults 1,000,000 /
@@ -68,14 +68,7 @@ object MetaSteady {
     val controlBatches = if (args.length > 3) args(3).toInt else 10
     val blobsPerBatch = if (args.length > 4) args(4).toInt else 20
     val cpus          = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(s"local[$cpus]")
 
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(workDir), true)

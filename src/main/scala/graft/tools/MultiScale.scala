@@ -1,9 +1,9 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 import graft.engine.{MirrorConfig, MirrorOrchestration}
+import graft.util.Sessions
 
 /** Multi-table mode at scale (`MultiScale <workDir> [nTables] [blobsPerTable]`,
   * defaults 4 / 100,000): the reference drains every table of a database
@@ -30,14 +30,7 @@ object MultiScale {
     val nTables = if (args.length > 1) args(1).toInt else 4
     val nBlobs  = if (args.length > 2) args(2).toInt else 100000
     val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(s"local[$cpus]")
 
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(workDir), true)

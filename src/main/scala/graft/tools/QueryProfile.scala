@@ -1,13 +1,16 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import graft.util.Sessions
 
-/** Generic per-query adjudication instrument — the SpansProfile/KmeansProfile
-  * pattern for ANY registry query, so a bench watch item costs one command
-  * instead of a new tool per round: run the exact gated query `reps` times in
-  * one JVM against `dir` and print per-rep wall/gc/lowering plus per-JOB wall /
-  * task time / max task / task count; `lower` tags a job the lowering launched.
+/** Generic per-query adjudication instrument for ANY registry query, so a
+  * bench watch item costs one command instead of a new tool per round (the
+  * one-off profilers it replaced are in git history: the spans spread
+  * adjudication in commit 26543de / BENCH_SF10_r14, the embed_kmeans one in
+  * 7ea5596): run the exact gated query `reps` times in one JVM against `dir`
+  * and print per-rep wall/gc/lowering plus per-JOB wall / task time / max task
+  * / task count; `lower` tags a job the lowering launched.
   *
   * Reads: a straggler task (maxTask ≫ run/tasks) names skew; wall ≫ execRun
   * names scheduling gaps or I/O waits; rep-1-only cost names warm-up; uniform
@@ -26,6 +29,12 @@ object QueryProfile {
     val jobWallMs  = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobSite    = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     private val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    private val execDesc = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => execDesc.put(x.executionId.toString, x.description)
+      case _                                 =>
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       jobStart.put(e.jobId, e.time)
@@ -35,8 +44,18 @@ object QueryProfile {
       // — how a per-job line maps back to the operator stage it belongs to;
       // without it every adjudication had to reconstruct job identity from
       // position and task counts (job properties carry no callSite here)
-      val site = e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("")
-      jobSite.put(e.jobId, site)
+      val result = e.stageInfos.sortBy(_.stageId).lastOption
+      val stage  = result.map(_.name).getOrElse("")
+      jobSite.put(e.jobId, if (!stage.contains("CompletableFuture.java")) stage else {
+        // AQE query stages, broadcasts and subqueries run on a thread pool, so
+        // their stage name is a pool frame: name them by the SQL execution
+        // that launched them and the first and last operator of the stage
+        // ("exec 3 count at …: AQEShuffleRead -> Exchange")
+        val ops = result.toSeq.flatMap(_.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim))).distinct
+        val opSpan = if (ops.isEmpty) "" else s": ${Seq(ops.head, ops.last).distinct.mkString(" -> ")}"
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .fold(stage)(id => s"exec $id ${execDesc.getOrDefault(id, "?")}$opSpan")
+      })
       val set = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
       e.stageIds.foreach(set.add)
       stageOfJob.put(e.jobId, set)
@@ -73,17 +92,9 @@ object QueryProfile {
     val dir  = args(1)
     val reps = if (args.length > 2) args(2).toInt else 6
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Sessions.start(Sessions.builder(s"local[$cpus]")
       // same broadcast posture as the committed Bench/ScaleBench records
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024))
     val timer = new JobTimer
     spark.sparkContext.addSparkListener(timer)
 

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+import graft.util.Sessions
 
 /** Scale-proof bench (`ScaleBench <smallDir> <bigDir> [scale]`): times the
   * headline queries plus the registry's historically most expensive ones at
@@ -68,12 +68,7 @@ object ScaleBench {
     val big   = args(1)
     val scale = if (args.length > 2) args(2).toDouble else 10.0
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Sessions.start(Sessions.builder(s"local[$cpus]")
       // STATIC broadcast threshold stays at Spark's 10 MB default: at the
       // 100× replica, planning-time size estimates on cached/derived frames
       // undercount by orders of magnitude, and a misestimated broadcast of
@@ -81,10 +76,7 @@ object ScaleBench {
       // Runtime-measured broadcasts stay generous: AQE converts shuffle
       // joins to broadcast at up to 64 MB of ACTUAL size — safe by
       // construction, since the size is known before the build.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", 64L * 1024 * 1024))
 
     // SPARK_GRAFT_SCALE_ONLY=prefix1,prefix2 — targeted re-runs while
     // iterating on one query's scale posture (full suite for records)
@@ -125,8 +117,9 @@ object ScaleBench {
 
     // JIT code-cache occupancy (all CodeHeap segments, MB) — the r12
     // embed_kmeans 143% SF10 draw adjudicated to COMPILATION state, not
-    // scheduling or GC (tools.KmeansProfile: rep-1 cold 11 s vs 4.1 s
-    // steady, maxTask uniform, gc negligible): a one-JVM 41-query suite
+    // scheduling or GC (commit 7ea5596: rep-1 cold 11 s vs 4.1 s steady,
+    // maxTask uniform, gc negligible; reproduce with `tools.QueryProfile
+    // embed_kmeans <dir>`): a one-JVM 41-query suite
     // can exhaust the default 240 MB cache, disabling/evicting compiled
     // code for everything measured after, which min-of-two cannot absorb.
     // Recording usage per query makes that state visible in the record.

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Sessions
 
 /** Build an N× replica of a driver testdata dir for SCALE benchmarking
   * (`ScaleData <srcDir> <dstDir> <copies>`): each fact table unions
@@ -31,13 +32,9 @@ object ScaleData {
     val Array(src, dst, copiesS) = args
     val copies = copiesS.toInt
     require(copies >= 1 && copies <= 100, s"copies out of range: $copies")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      // fixed, not the core count: a replica's file layout must not depend on the host
+      .config("spark.sql.shuffle.partitions", 32))
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
 

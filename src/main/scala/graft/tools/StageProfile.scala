@@ -1,9 +1,10 @@
 package graft.tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import graft.util.Sessions
 
 /** Sub-phase decomposition of the staged-read floor (`StageProfile
   * <workDir> [nBlobs]`, default 100,000 — round-14 verdict ask #7:
@@ -33,22 +34,8 @@ object StageProfile {
     val workDir = args(0)
     val nBlobs  = if (args.length > 1) args(1).toInt else 100000
     val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.sql.files.openCostInBytes", (64L * 1024).toString)
-      .config("spark.ui.enabled", "false")
-    // experiment knob: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — A/B the floor
-    // against reader/FS variants (e.g. RawLocalFileSystem to remove the
-    // checksum sidecar probing from the open path)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.builder(s"local[$cpus]")
+      .config("spark.sql.files.openCostInBytes", (64L * 1024).toString))
 
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(workDir), true)

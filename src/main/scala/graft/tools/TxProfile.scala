@@ -32,9 +32,7 @@ object TxProfile {
   }
 
   def real(table: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.start("local[8]")
     val reader = new graft.deltalog.DeltaLogReader(spark, table, "prof")
     val snap = t("fullSnapshot")(reader.fullSnapshot().get)
     val nAdds = snap.adds.size

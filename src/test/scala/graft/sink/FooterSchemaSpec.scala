@@ -12,13 +12,14 @@ import org.apache.spark.sql.graftbridge.GraftManifestScan
 import org.apache.spark.sql.types.LongType
 
 import graft.SparkSuite
+import graft.state.IndexStore
 
 /** `GraftManifestScan.footerSchema` is the schema every fixture and
   * externaldata parquet read runs with, so it must be exactly what Spark's
   * non-merging inference would have given — field metadata included, under
   * either `nanosAsLong` setting — and it must fail loudly, naming the path,
   * where inference cannot answer. Lowering a registry query then starts no
-  * Spark job.
+  * Spark job, and loading a persisted index artifact starts only its collect.
   */
 class FooterSchemaSpec extends SparkSuite {
 
@@ -114,5 +115,15 @@ class FooterSchemaSpec extends SparkSuite {
       assert(jobs == 0, s"$q launched $jobs job(s) while lowering")
       assert(df.columns.nonEmpty)
     }
+  }
+
+  test("loading a persisted index artifact starts only its collect job, no schema inference") {
+    val art   = s"${tmpDir("footer-index")}/ivf_k2"
+    val cents = Seq(Seq(1.0, 2.0), Seq(3.0, 4.0))
+    assert(IndexStore.loadOrTrainCentroids(spark, art)(cents) == cents)
+    val (loaded, jobs) = jobsDuring(
+      IndexStore.loadOrTrainCentroids(spark, art)(fail("retrained a persisted artifact")))
+    assert(loaded == cents)
+    assert(jobs == 1, s"loading $art launched $jobs job(s); only the collect belongs")
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,6 +7,7 @@ import graft.deltalog.TestDelta
 import graft.engine.{MirrorConfig, MirrorOrchestrator}
 import graft.sink.MirrorTable
 import graft.streaming.StreamMirror
+import graft.util.Sessions
 
 /** Scale-proof for the STREAMING mirror path (`sbt "Test/runMain
   * graft.tools.StreamScale [rows] [commits]"`): builds one Delta source of
@@ -26,14 +26,7 @@ object StreamScale {
     val rows    = if (args.nonEmpty) args(0).toLong else 600000L
     val commits = if (args.length > 1) args(1).toInt else 20
     val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(s"local[$cpus]")
 
     val base = java.nio.file.Files.createTempDirectory("streamscale").toString
     val schema = StructType(Seq(
