@@ -83,9 +83,10 @@ object MirrorDemo {
       clusterBy = Seq("id"), statsColumns = Seq("id"))
     println(s"[demo] after sink OPTIMIZE: rows=${orch.table.snapshot().count()} " +
       s"live-files=${orch.table.liveAdds().size}")
-    println(s"[demo] stats-pruned read id∈[0,50]: " +
-      s"files=${orch.table.snapshotRange("id", 0, 50).inputFiles.length} " +
-      s"of ${orch.table.snapshot().inputFiles.length}")
+    val ranged = graft.kql.KqlPipeline.run(Map("T" -> orch.table.snapshot()), "T | where id between (0 .. 50)")
+    ranged.collect()
+    println(s"[demo] T | where id between (0 .. 50): files read=" +
+      s"${org.apache.spark.sql.graftbridge.GraftManifestScan.filesRead(ranged)} of ${orch.table.liveAdds().size}")
 
     // time travel: the table as of its first data-bearing commit (ONE
     // commit-replay pass to locate it, not a fold per version)

@@ -6,6 +6,7 @@ import java.time.Instant
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftManifestScan
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.deltalog.DeltaLogReader
@@ -32,8 +33,8 @@ final case class MirrorConfig(
     continuous: Boolean = false,
     probeIntervalMs: Long = 5000L, // BETWEEN_TX_PROBE_DELAY, DeltaTableOrchestration.cs:16
     readAhead: Int = DeltaLogReader.DefaultReadAhead,
-    // numeric columns to record per-file min/max for at publish/delete time
-    // (data-skipping metadata — see MirrorTable.snapshotRange)
+    // numeric and string columns to record per-file min/max for at publish/
+    // delete time; mirror reads skip files by them (see MirrorTable.manifestRead)
     statsColumns: Seq[String] = Nil,
     // concurrent ingest workers for staging/delete-rewrite job submission —
     // the reference's N-worker pool, min(capacity, queue)
@@ -364,23 +365,12 @@ class MirrorOrchestrator(
       // manifest scan: the Delta log records every add's length, so the
       // group read hands Spark the file statuses directly — zero listing
       // (spark.read.parquet over 10⁵ explicit paths cost 380 s of
-      // glob-status + distributed-listing jobs per 10⁶-blob batch). Adds
-      // missing a size (legal but rare in real logs) fall back to a listed
-      // read for the whole group — the manifest must never guess a length.
-      val scan: DataFrame = graft.util.PhaseTimer.time("stage.plan") {
-        if (adds.forall(a => a.size.exists(_ > 0L) && a.blobPath.isDefined))
-          org.apache.spark.sql.graftbridge.GraftManifestScan.parquet(
-            stagingSpark, physicalSchema,
-            adds.map { a =>
-              org.apache.spark.sql.graftbridge.GraftManifestScan.status(
-                new Path(tableRoot, a.blobPath.get), a.size.get,
-                a.deltaTimestamp.map(_.toEpochMilli).getOrElse(0L))
-            })
-        else {
-          val paths = adds.flatMap(_.blobPath).map(rel => new Path(tableRoot, rel).toString)
-          stagingSpark.read.schema(physicalSchema).parquet(paths: _*)
-        }
-      }
+      // glob-status + distributed-listing jobs per 10⁶-blob batch). An add
+      // missing a size (legal but rare in real logs) makes the scan list the
+      // whole group — the manifest must never guess a length.
+      val scan: DataFrame = graft.util.PhaseTimer.time("stage.plan")(GraftManifestScan.parquet(
+        stagingSpark, physicalSchema, adds.flatMap(a => a.blobPath.map(rel => GraftManifestScan.status(
+          new Path(tableRoot, rel), a.size.getOrElse(0L), a.deltaTimestamp.map(_.toEpochMilli).getOrElse(0L))))))
       var df: DataFrame = scan
         .withColumn("_abs", MirrorTable.normalizePathCol(input_file_name()))
         .join(broadcast(mapping), Seq("_abs"), "left")

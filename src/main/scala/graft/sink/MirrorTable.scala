@@ -2,14 +2,19 @@ package graft.sink
 
 import java.sql.Timestamp
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftbridge.GraftManifestScan
+import org.apache.spark.sql.types.{DoubleType, NumericType, StringType, StructType}
 
 import graft.deltalog.{DeltaLogReader, DeltaLogWriter}
-import graft.txlog.TxLog
+import graft.txlog.{TransactionItem, TxLog}
 import graft.types.KustoTypes
 
 /** The mirror *target*: a parquet-backed table with an atomic commit log —
@@ -69,29 +74,15 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     }
   }
 
-  def currentMeta(): Option[(StructType, Seq[String])] =
-    snapshotLog().flatMap(_.metadata).map { m =>
-      (KustoTypes.structFrom(m.schema.getOrElse(Seq.empty)),
-        m.partitionColumns.getOrElse(Seq.empty))
-    }
+  def currentMeta(): Option[(StructType, Seq[String])] = snapshotLog().flatMap(_.metadata).map(metaOf)
+
+  private def metaOf(m: TransactionItem): (StructType, Seq[String]) =
+    (KustoTypes.structFrom(m.schema.getOrElse(Seq.empty)), m.partitionColumns.getOrElse(Seq.empty))
 
   /** Staging area of one batch attempt (S13) — final location, pre-publish. */
   def stagingDir(stagingName: String): Path = new Path(dataPath, stagingName)
 
   def stagingExists(stagingName: String): Boolean = fs.exists(stagingDir(stagingName))
-
-  /** Remove a staging area that was never published (reset path,
-    * DeltaTableOrchestration.cs:181-200). Refuses if any of its files are
-    * already live.
-    */
-  def dropUnpublishedStaging(stagingName: String): Unit = {
-    val p = stagingDir(stagingName)
-    if (!fs.exists(p)) return
-    val prefix = s"data/$stagingName/"
-    require(!liveAdds().exists(_.path.startsWith(prefix)),
-      s"Staging $stagingName is published; refusing to delete")
-    fs.delete(p, true)
-  }
 
   /** Write one partition-group's rows under the batch staging area
     * (invisible until publish). Overwrite-idempotent per (staging, group).
@@ -117,20 +108,14 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     if (files.isEmpty) return -1L
 
     val live = graft.util.PhaseTimer.time("publish.live")(liveAdds().map(_.path).toSet)
-    val rel  = files.map(f => f -> relPath(f.getPath))
-      .filterNot { case (_, r) => live.contains(r) }
-    if (rel.isEmpty) return -1L
+    val fresh = files.filterNot(f => live.contains(relPath(f.getPath)))
+    if (fresh.isEmpty) return -1L
 
     val lineage = graft.util.PhaseTimer.time("publish.lineage")(
-      lineageOf(rel.map(_._1), statsColumns))
-    val actions = rel.map { case (f, r) =>
-      val p    = f.getPath
-      val meta = lineage.getOrElse(normalizePath(p.toString), FileMeta(Seq.empty, 0L))
-      // partition values recorded per file (keyed by the staging group dir)
-      // → metadata-only partition pruning at read time, like Kusto extents
-      val pv = pvByGroup.getOrElse(p.getParent.getName, Map.empty)
-      writer.addAction(r, f.getLen, pv, Some(meta.rows), tags = tagsFor(meta))
-    }
+      lineageOf(fresh, statsColumns))
+    // partition values recorded per file (keyed by the staging group dir)
+    // → metadata-only partition pruning at read time, like Kusto extents
+    val actions = fresh.map(f => addFor(f, pvByGroup.getOrElse(f.getPath.getParent.getName, Map.empty), lineage))
     val v = graft.util.PhaseTimer.time("publish.commit")(writer.commit(actions))
     maybeCheckpoint(v)
     v
@@ -160,44 +145,44 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
       ts.map(t => pathEq && col(KustoTypes.IngestTsColumn) === lit(t)).getOrElse(pathEq)
     }.reduce(_ || _)
 
-    val stagingName = s"delete-${java.util.UUID.randomUUID().toString.take(8)}"
-    // one rewrite job per affected PARTITION GROUP, not per file — a delete
-    // touching 10k files submits tens of group jobs (bounded-parallel), each
-    // reading all its files in one MANIFEST scan (lengths come from the
-    // commit log; no per-path listing). The explicit CURRENT table schema
-    // subsumes what the old mergeSchema read computed: schema evolution is
-    // additive-only (mergeSchemas refuses type changes), so every live file
-    // holds a subset of it and older files surface the newer columns as
-    // nulls — exactly the create-merge read semantics.
-    val tableSchema = currentMeta().getOrElse(
-      throw new IllegalStateException(s"Mirror table $name has no schema commit"))._1
-    val byPv = affected.groupBy(_.partitionValues).toSeq.sortBy(_._1.toString)
-    val rewritten = graft.util.BoundedPar.run(byPv.zipWithIndex, parallelism) {
+    rewriteGroups("delete", affected.groupBy(_.partitionValues).toSeq.sortBy(_._1.toString),
+      statsColumns, parallelism)((in, _) => in.filter(keep))
+  }
+
+  /** Rewrite each partition group's live files through `rewrite` and commit,
+    * in ONE commit, their removes plus the rewritten files, which keep their
+    * group's partition values and the stat columns their inputs carried (as
+    * well as `statsColumns`), so file pruning keeps working.
+    *
+    * One rewrite job per group, not per file — a delete touching 10k files
+    * submits tens of group jobs (bounded-parallel), each reading all its
+    * files in one MANIFEST scan (lengths come from the commit log; no
+    * per-path listing). The reads use the TABLE schema, not footer
+    * inference: schema evolution is additive-only (mergeSchemas refuses type
+    * changes), so every live file holds a subset of it and older files
+    * surface the newer columns as nulls, where inference from a sampled old
+    * footer would stage the rewrite without the column and erase its values.
+    */
+  private def rewriteGroups(
+      prefix: String,
+      groups: Seq[(Map[String, String], Seq[LiveFile])],
+      statsColumns: Seq[String],
+      parallelism: Int)(rewrite: (DataFrame, Seq[LiveFile]) => DataFrame): Long = {
+    val stagingName = s"$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
+    val meta = tableMeta()
+    val staged = graft.util.BoundedPar.run(groups.zipWithIndex, parallelism) {
       case ((pv, adds), i) =>
-        val df = manifestRead(tableSchema, adds.map(a => (a.path, a.size))).filter(keep)
-        stage(stagingName, s"rw$i", df)
-        (pv, adds, listParquet(new Path(stagingDir(stagingName), s"rw$i")))
+        stage(stagingName, s"g$i", rewrite(manifestRead(meta, adds), adds))
+        (pv, adds, listParquet(new Path(stagingDir(stagingName), s"g$i")))
     }
-    val newFiles = rewritten.flatMap(_._3)
-    val lineage  = if (newFiles.nonEmpty) lineageOf(newFiles, statsColumns)
-                   else Map.empty[String, FileMeta]
-    val fileToPv = rewritten.flatMap { case (pv, _, files) =>
-      files.map(_.getPath -> pv)
-    }.toMap
-    val actions =
-      rewritten.flatMap { case (_, adds, _) =>
-        adds.map(a => writer.removeAction(a.path, Some(a.partitionValues)))
-      } ++
-        newFiles.map { f =>
-          val p    = f.getPath
-          val meta = lineage.getOrElse(normalizePath(p.toString), FileMeta(Seq.empty, 0L))
-          // rewrites inherit their group's partition values so file-level
-          // pruning keeps working after deletes
-          writer.addAction(relPath(p), f.getLen,
-            fileToPv.getOrElse(p, Map.empty), Some(meta.rows),
-            tags = tagsFor(meta))
-        }
-    val v = writer.commit(actions)
+    val newFiles = staged.flatMap(_._3)
+    val inherited = groups.flatMap(_._2).flatMap(a => recordedStats(a.tags).keys)
+    val lineage  = if (newFiles.isEmpty) Map.empty[String, FileMeta]
+                   else lineageOf(newFiles, (statsColumns ++ inherited).distinct)
+    val v = writer.commit(staged.flatMap { case (pv, adds, files) =>
+      adds.map(a => writer.removeAction(a.path, Some(a.partitionValues))) ++
+        files.map(f => addFor(f, pv, lineage))
+    })
     maybeCheckpoint(v)
     v
   }
@@ -216,9 +201,9 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     *
     * `clusterBy` additionally range-partitions each group's rows on the
     * given columns before writing — output files then carry disjoint
-    * min/max ranges, so parquet row-group/file skipping answers range
-    * predicates on those columns without opening unrelated files (the
-    * ZORDER-lite of a single-dimension sort).
+    * min/max ranges, so the scan's file skipping answers range filters on
+    * those columns without opening unrelated files (the ZORDER-lite of a
+    * single-dimension sort).
     * Returns the commit version, or -1 if nothing to compact.
     */
   def optimize(
@@ -233,53 +218,14 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
       .sortBy(_._1.toSeq.sorted.mkString(","))
     if (groups.isEmpty) return -1L
 
-    // read with the TABLE schema, not footer inference: after additive
-    // schema evolution a group can mix old files (missing the new column)
-    // with new ones — inference from a sampled old footer would stage the
-    // rewrite without the column and erase its values for good
-    val tableSchema = currentMeta().getOrElse(
-      throw new IllegalStateException(s"Mirror table $name has no schema commit"))._1
-
-    val stagingName = s"optimize-${java.util.UUID.randomUUID().toString.take(8)}"
-    val staged = groups.zipWithIndex.map { case ((pv, files), gi) =>
-      val totalBytes = files.map(_.size).sum
-      val nOut       = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      val in         = manifestRead(tableSchema, files.map(a => (a.path, a.size)))
-      val out =
-        if (clusterBy.nonEmpty)
-          in.repartitionByRange(nOut, clusterBy.map(org.apache.spark.sql.functions.col): _*)
-            .sortWithinPartitions(clusterBy.map(org.apache.spark.sql.functions.col): _*)
-        else in.repartition(nOut)
-      stage(stagingName, s"g$gi", out)
-      (pv, files, listParquet(new Path(stagingDir(stagingName), s"g$gi")))
-    }
-
-    // ONE lineage job over every group's output, not one collect per group;
     // stats recorded for clusterBy columns too — the whole point of range
-    // clustering is that the resulting min/max ranges drive skipping. Also
-    // re-record whatever stat columns the INPUT files already carried, so a
-    // maintenance OPTIMIZE without explicit statsColumns doesn't silently
-    // strip the skipping metadata the publisher recorded.
-    val inherited = groups.flatMap(_._2).flatMap { a =>
-      a.tags.get(StatsTag).toSeq.flatMap { json =>
-        val it = M.readTree(json).fieldNames()
-        Iterator.continually(if (it.hasNext) it.next() else null).takeWhile(_ != null)
-      }
+    // clustering is that the resulting min/max ranges drive skipping
+    rewriteGroups("optimize", groups, statsColumns ++ clusterBy, parallelism = 1) {
+      (in, files) =>
+        val nOut = math.max(1, math.ceil(files.map(_.size).sum.toDouble / targetFileBytes).toInt)
+        if (clusterBy.isEmpty) in.repartition(nOut)
+        else in.repartitionByRange(nOut, clusterBy.map(col): _*).sortWithinPartitions(clusterBy.map(col): _*)
     }
-    val lineage = lineageOf(staged.flatMap(_._3),
-      (statsColumns ++ clusterBy ++ inherited).distinct)
-    val actions = staged.flatMap { case (pv, files, newFiles) =>
-      files.map(a => writer.removeAction(a.path, Some(a.partitionValues))) ++
-        newFiles.map { f =>
-          val p    = f.getPath
-          val meta = lineage.getOrElse(normalizePath(p.toString), FileMeta(Seq.empty, 0L))
-          writer.addAction(relPath(p), f.getLen, pv, Some(meta.rows),
-            tags = tagsFor(meta))
-        }
-    }
-    val v = writer.commit(actions)
-    maybeCheckpoint(v)
-    v
   }
 
   /** Live file inventory straight from the commit log — no data scan. Tags
@@ -287,11 +233,7 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     * the latest sink checkpoint: a rebuild is O(checkpoint + trailing
     * commits), never O(entire commit log), on a long-lived mirror.
     */
-  def liveAdds(): Seq[LiveFile] =
-    snapshotLog().toSeq.flatMap(_.adds).map { a =>
-      LiveFile(a.blobPath.get, a.partitionValues.getOrElse(Map.empty),
-        a.size.getOrElse(0L), a.tags.getOrElse(Map.empty))
-    }
+  def liveAdds(): Seq[LiveFile] = snapshotLog().toSeq.flatMap(_.adds).map(LiveFile.of)
 
   /** Max count of live files under `smallFileBytes` sharing one partition
     * tuple — the auto-OPTIMIZE trigger metric. Metadata-only (commit-log
@@ -394,81 +336,44 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   }
 
   /** The mirrored table as a DataFrame: live files only, full mirror schema
-    * (source columns + lineage columns).
+    * (source columns + lineage columns). Filters on the frame prune files:
+    * see [[manifestRead]].
     */
-  def snapshot(): DataFrame = snapshotWhere(_ => true)
+  def snapshot(): DataFrame = manifestRead(tableMeta(), liveAdds())
 
-  /** Partition-pruned snapshot: only live files whose recorded partition
-    * values satisfy `partitionPredicate` are opened — O(pruned files)
-    * metadata work, zero data touched for pruned partitions (the extent-
-    * pruning Kusto performs on partitioned mirrors).
+  /** Parquet over live files served from the commit log — zero filesystem
+    * listing at plan time (the log IS the manifest; a 10⁶-file snapshot must
+    * not pay a 10⁶-path glob+list per read). Our own publisher always records
+    * true lengths; the scan lists a log that did not.
     *
-    * SUPERSET semantics, like all file skipping: files without recorded
-    * partition values (unpartitioned tables, or files compacted across
-    * partitions by [[optimize]]) are conservatively INCLUDED — callers must
-    * still apply their row-level filter on the returned frame; the pruning
-    * only bounds which files get opened.
+    * The manifest scan skips files whose bounds rule out the query's pushed
+    * filters. A partition column's bounds are its recorded value, cast to the
+    * column type as staging casts it (min = max); a null value or a failed
+    * cast leaves it unbounded. Other numeric and string columns use the
+    * recorded `graft.stats` min/max, numeric ones in the double domain they
+    * were recorded in. The tag is decoded only when a filter names such a
+    * column.
     */
-  def snapshotWhere(partitionPredicate: Map[String, String] => Boolean): DataFrame =
-    prunedSnapshot(a => a.partitionValues.isEmpty || partitionPredicate(a.partitionValues))
-
-  /** Shared body of every pruned read: current schema over the live files
-    * `keep` selects (pruning predicates must be conservative — include when
-    * in doubt); typed empty frame when nothing survives.
-    */
-  private def prunedSnapshot(keep: LiveFile => Boolean): DataFrame = {
-    val meta = currentMeta().getOrElse(
-      throw new IllegalStateException(s"Mirror table $name has no schema commit"))
-    val files = liveAdds().filter(keep)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta._1)
-    else manifestRead(meta._1, files.map(a => (a.path, a.size)))
+  private def manifestRead(meta: (StructType, Seq[String]), files: Seq[LiveFile]): DataFrame = {
+    val (schema, pcols) = meta
+    val boundTypes = schema.fields.collect {
+      case f if f.dataType == StringType => f.name -> StringType
+      case f if f.dataType.isInstanceOf[NumericType] =>
+        f.name -> (if (pcols.contains(f.name)) f.dataType else DoubleType)
+    }.toMap
+    def bounds(a: LiveFile): GraftManifestScan.FileBounds = cols => {
+      lazy val stats = recordedStats(a.tags)
+      cols.flatMap { c =>
+        if (pcols.contains(c))
+          a.partitionValues.get(c).flatMap(v => Try(Cast(Literal(v), boundTypes(c)).eval()).toOption)
+            .flatMap(Option(_)).map(v => c -> ((v, v)))
+        else stats.get(c).map(c -> _)
+      }.toMap
+    }
+    GraftManifestScan.parquet(spark, schema,
+      files.map(a => GraftManifestScan.status(new Path(root, a.path), a.size)),
+      boundTypes = boundTypes, bounds = files.map(bounds))
   }
-
-  /** Parquet over (relPath, recordedLen) pairs served from the commit log —
-    * zero filesystem listing at plan time (the log IS the manifest; a 10⁶-
-    * file snapshot must not pay a 10⁶-path glob+list per read). Our own
-    * publisher always records true lengths; a non-positive length (foreign
-    * or hand-built log) falls back to a listed read rather than trust it.
-    */
-  private def manifestRead(schema: StructType, files: Seq[(String, Long)]): DataFrame =
-    if (files.forall(_._2 > 0L))
-      org.apache.spark.sql.graftbridge.GraftManifestScan.parquet(
-        spark, schema,
-        files.map { case (rel, len) =>
-          org.apache.spark.sql.graftbridge.GraftManifestScan.status(new Path(root, rel), len)
-        })
-    else spark.read.schema(schema).parquet(files.map(f => new Path(root, f._1).toString): _*)
-
-  /** Stats-pruned snapshot: only live files whose recorded numeric
-    * [min,max] for `column` intersects [lo,hi] are opened. Files without
-    * recorded stats for the column are conservatively INCLUDED (superset
-    * semantics, same contract as [[snapshotWhere]]) — callers still apply
-    * the row-level filter. Stats come from `statsColumns` at publish/
-    * delete/OPTIMIZE time; `optimize(clusterBy = ...)` makes the ranges
-    * disjoint across files, which is when this pruning pays off.
-    */
-  def snapshotRange(column: String, lo: Double, hi: Double): DataFrame =
-    prunedSnapshot { a =>
-      statsOf(a, column) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None           => true
-      }
-    }
-
-  /** [[snapshotRange]] for STRING columns: lexicographic [lo,hi] pruning on
-    * the recorded string bounds (ASCII-only and truncation-widened at record
-    * time — see `truncateBounds` — so the superset contract holds for long
-    * and non-ASCII values too). The pruning shape for date-string / category
-    * columns — the other classic skipping axis.
-    */
-  def snapshotRangeString(column: String, lo: String, hi: String): DataFrame =
-    prunedSnapshot { a =>
-      strStatsOf(a, column) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None           => true
-      }
-    }
 
   /** Time travel: the table exactly as of sink-log commit `version` —
     * the as-of metadata's schema over the as-of live file set. Reproducible
@@ -480,13 +385,8 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   def snapshotAt(version: Long): DataFrame = {
     val log = reader.snapshotAsOf(version).getOrElse(
       throw new IllegalArgumentException(s"No commits at or before version $version for $name"))
-    val schema = log.metadata.map(m => KustoTypes.structFrom(m.schema.getOrElse(Seq.empty)))
-      .getOrElse(currentMeta().map(_._1).getOrElse(
-        throw new IllegalStateException(s"Mirror table $name has no schema commit")))
-    val files = log.adds.flatMap(a => a.blobPath.map(p => (p, a.size.getOrElse(0L))))
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else manifestRead(schema, files)
+    manifestRead(log.metadata.map(metaOf).getOrElse(tableMeta()),
+      log.adds.filter(_.blobPath.isDefined).map(LiveFile.of))
   }
 
   /** Commit history (DESCRIBE HISTORY analog): one row per sink-log commit
@@ -517,24 +417,19 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   def changesBetween(fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"changesBetween: fromVersion $fromVersion > toVersion $toVersion")
-    val schema = currentMeta().map(_._1).getOrElse(
-      throw new IllegalStateException(s"Mirror table $name has no schema commit"))
+    val meta = tableMeta()
     val logs = reader.readCommits(reader.listCommits(fromVersion + 1, toVersion))
     // a path re-added at multiple versions inside the range yields ONE row
     // per data row, tagged with the LATEST introducing commit — matching the
     // manifest scan's last-entry-wins read of the file; without this dedup
     // the version join fanned each row out once per re-add (round-14 advice)
     val added = logs.flatMap { l =>
-      l.adds.flatMap(a => a.blobPath.map(p => (p, a.size.getOrElse(0L), l.startTxId)))
-    }.groupBy(t => normalizePath(new Path(root, t._1).toString))
-      .valuesIterator.map(_.maxBy(_._3)).toSeq.sortBy(_._3)
-    val fileToV = added.map { case (p, _, v) =>
-      normalizePath(new Path(root, p).toString) -> v
+      l.adds.filter(_.blobPath.isDefined).map(a => (LiveFile.of(a), l.startTxId))
+    }.groupBy(t => normalizePath(new Path(root, t._1.path).toString))
+      .valuesIterator.map(_.maxBy(_._2)).toSeq.sortBy(_._2)
+    val fileToV = added.map { case (a, v) =>
+      normalizePath(new Path(root, a.path).toString) -> v
     }
-    val out = KustoTypes.CommitVersionColumn
-    if (fileToV.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema.add(out, org.apache.spark.sql.types.LongType))
     // a range reaching vacuumed history must fail with the CONTRACT, not a
     // raw PATH_NOT_FOUND from the scan (metadata-bounded existence check)
     val vacuumed = fileToV.collect {
@@ -545,8 +440,8 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
         s"changesBetween($fromVersion, $toVersion) reaches ${vacuumed.size} file(s) already " +
           s"reclaimed by VACUUM — narrow the range or raise vacuum retention. First: ${vacuumed.head}")
     import spark.implicits._
-    val mapping = fileToV.toDF("_abs", out)
-    manifestRead(schema, added.map(t => (t._1, t._2)))
+    val mapping = fileToV.toDF("_abs", KustoTypes.CommitVersionColumn)
+    manifestRead(meta, added.map(_._1))
       .withColumn("_abs", normalizePathCol(input_file_name()))
       .join(broadcast(mapping), Seq("_abs"))
       .drop("_abs")
@@ -568,22 +463,17 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   def currentVersion(): Long = reader.listCommits().lastOption.map(_._1).getOrElse(-1L)
 
   /** Recorded numeric (min,max) of `column` for a live file, if kept. */
-  def statsOf(a: LiveFile, column: String): Option[(Double, Double)] =
-    a.tags.get(StatsTag).flatMap { json =>
-      val node = M.readTree(json).get(column)
-      if (node == null || node.size() != 2 || !node.get(0).isNumber) None
-      else Some((node.get(0).asDouble(), node.get(1).asDouble()))
-    }
+  private[graft] def statsOf(a: LiveFile, column: String): Option[(Double, Double)] =
+    recordedStats(a.tags).get(column).collect { case (mn: Double, mx: Double) => (mn, mx) }
 
   /** Recorded lexicographic string (min,max) of `column`, if kept. */
-  def strStatsOf(a: LiveFile, column: String): Option[(String, String)] =
-    a.tags.get(StatsTag).flatMap { json =>
-      val node = M.readTree(json).get(column)
-      if (node == null || node.size() != 2 || !node.get(0).isTextual) None
-      else Some((node.get(0).asText(), node.get(1).asText()))
-    }
+  private[graft] def strStatsOf(a: LiveFile, column: String): Option[(String, String)] =
+    recordedStats(a.tags).get(column).collect { case (mn: String, mx: String) => (mn, mx) }
 
   // ---- internals ----------------------------------------------------------
+
+  private def tableMeta(): (StructType, Seq[String]) = currentMeta().getOrElse(
+    throw new IllegalStateException(s"Mirror table $name has no schema commit"))
 
   private def relPath(p: Path): String =
     normalizePath(p.toString).stripPrefix(normalizePath(root.toString)).stripPrefix("/")
@@ -604,8 +494,8 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   }
 
   /** One distributed job: per staged file → (source blobs, row count, and —
-    * when `statsCols` is non-empty — per-column min/max for numeric data
-    * skipping). Columns absent from the table schema are skipped silently.
+    * when `statsCols` is non-empty — per-column min/max for data skipping).
+    * Columns absent from the table schema are skipped silently.
     * Takes the statuses the caller already holds from its staging listing —
     * a manifest scan, so publish never re-lists or schema-infers what it
     * just wrote.
@@ -613,73 +503,58 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   private def lineageOf(
       files: Seq[org.apache.hadoop.fs.FileStatus],
       statsCols: Seq[String] = Nil): Map[String, FileMeta] = {
-    val schema = currentMeta().getOrElse(
-      throw new IllegalStateException(s"Mirror table $name has no schema commit"))._1
-    val df = org.apache.spark.sql.graftbridge.GraftManifestScan.parquet(spark, schema, files)
+    val df    = GraftManifestScan.parquet(spark, tableMeta()._1, files)
+    val stats = statsCols.filter(df.columns.contains)
     // string columns keep lexicographic string bounds; everything else goes
     // through the numeric double path
-    val (strCols, present) = statsCols.filter(df.columns.contains).partition { c =>
-      df.schema(c).dataType == org.apache.spark.sql.types.StringType
-    }
-    val statAggs = present.flatMap { c =>
-      Seq(min(col(c).cast("double")).as(s"_min_$c"), max(col(c).cast("double")).as(s"_max_$c"))
-    } ++ strCols.flatMap { c =>
-      Seq(min(col(c)).as(s"_smin_$c"), max(col(c)).as(s"_smax_$c"))
-    }
+    def bounded(c: String) = if (df.schema(c).dataType == StringType) col(c) else col(c).cast("double")
+    val statAggs = stats.flatMap(c => Seq(min(bounded(c)).as(s"_min_$c"), max(bounded(c)).as(s"_max_$c")))
     val base = Seq(
       collect_set(col(KustoTypes.BlobPathColumn)).as("blobs"), count(lit(1)).as("rows"))
     df.groupBy(normalizePathCol(input_file_name()).as("_file"))
       .agg(base.head, (base.tail ++ statAggs): _*)
       .collect()
       .map { r =>
-        val strStats = strCols.flatMap { c =>
-          val mn = r.getAs[String](s"_smin_$c")
-          val mx = r.getAs[String](s"_smax_$c")
-          if (mn == null || mx == null) None
-          else truncateBounds(mn, mx).map(c -> _)
-        }.toMap
-        val stats = present.flatMap { c =>
-          val mi = r.getAs[Any](s"_min_$c")
-          val ma = r.getAs[Any](s"_max_$c")
-          if (mi == null || ma == null) None
-          else {
-            val (lo, hi) = (mi.asInstanceOf[Double], ma.asInstanceOf[Double])
+        val bounds = stats.flatMap { c =>
+          (r.getAs[Any](s"_min_$c"), r.getAs[Any](s"_max_$c")) match {
+            case (mn: String, mx: String) => truncateBounds(mn, mx).map(c -> _)
             // NaN/Infinity would serialize to invalid JSON and poison every
-            // later statsOf parse — drop the column's stats for this file
+            // later decode of the tag — drop the column's stats for this file
             // (conservative include at prune time) instead
-            if (java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi)) {
+            case (lo: Double, hi: Double) if java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi) =>
               // the double cast rounds 64-bit integers beyond 2^53 — possibly
-              // INWARD, which would let snapshotRange prune a file that holds
+              // INWARD, which would let the scan prune a file that holds
               // matching rows. Widen one ulp outward to keep the recorded
               // range a superset of the true range (skip at ±MaxValue where
               // widening would leave the finite domain).
               val loW = { val w = Math.nextDown(lo); if (java.lang.Double.isFinite(w)) w else lo }
               val hiW = { val w = Math.nextUp(hi); if (java.lang.Double.isFinite(w)) w else hi }
               Some(c -> ((loW, hiW)))
-            } else None
+            case _ => None
           }
         }.toMap
-        r.getString(0) -> FileMeta(r.getSeq[String](1), r.getLong(2), stats, strStats)
+        r.getString(0) -> FileMeta(r.getSeq[String](1), r.getLong(2), bounds)
       }
       .toMap
   }
 
-  /** Tags for one published file: source-blob lineage + optional min/max
-    * stats (JSON: {"col":[min,max],...} — numbers for numeric columns,
-    * JSON strings for string columns; keys sorted for determinism).
+  /** The add action of one staged file. Its tags are the source-blob lineage
+    * plus optional min/max stats (JSON: {"col":[min,max],...} — numbers for
+    * numeric columns, JSON strings for string columns; keys sorted for
+    * determinism).
     */
-  private def tagsFor(meta: FileMeta): Map[String, String] = {
+  private def addFor(
+      f: org.apache.hadoop.fs.FileStatus, pv: Map[String, String], lineage: Map[String, FileMeta]): String = {
+    val meta = lineage.getOrElse(normalizePath(f.getPath.toString), FileMeta(Seq.empty, 0L))
     val lineageTag = Map(SourceBlobsTag -> M.writeValueAsString(meta.blobs.toArray))
-    if (meta.stats.isEmpty && meta.strStats.isEmpty) lineageTag
-    else {
+    val tags = if (meta.stats.isEmpty) lineageTag else {
       val node = M.createObjectNode()
-      (meta.stats.keySet ++ meta.strStats.keySet).toSeq.sorted.foreach { c =>
-        val arr = node.putArray(c)
-        meta.stats.get(c).foreach { case (mi, ma) => arr.add(mi); arr.add(ma) }
-        meta.strStats.get(c).foreach { case (mi, ma) => arr.add(mi); arr.add(ma) }
+      meta.stats.toSeq.sortBy(_._1).foreach { case (c, (mi, ma)) =>
+        node.set[JsonNode](c, M.valueToTree[JsonNode](Array(mi, ma)))
       }
       lineageTag + (StatsTag -> M.writeValueAsString(node))
     }
+    writer.addAction(relPath(f.getPath), f.getLen, pv, Some(meta.rows), tags = tags)
   }
 
   // test hook: I/O accounting for rebuild-cost assertions
@@ -745,22 +620,41 @@ object MirrorTable {
       size: Long,
       tags: Map[String, String])
 
-  /** Per-file publish metadata from one lineage job. */
-  final case class FileMeta(
-      blobs: Seq[String],
-      rows: Long,
-      stats: Map[String, (Double, Double)] = Map.empty,
-      strStats: Map[String, (String, String)] = Map.empty)
+  object LiveFile {
+    def of(a: TransactionItem): LiveFile = LiveFile(a.blobPath.get,
+      a.partitionValues.getOrElse(Map.empty), a.size.getOrElse(0L), a.tags.getOrElse(Map.empty))
+  }
+
+  /** Per-file publish metadata from one lineage job; `stats` as
+    * [[recordedStats]] decodes them.
+    */
+  final case class FileMeta(blobs: Seq[String], rows: Long, stats: Map[String, (Any, Any)] = Map.empty)
+
+  /** The `graft.stats` tag of a file decoded: column → (min, max), Doubles
+    * for numeric columns and Strings for string columns. Every reader of the
+    * tag goes through here.
+    */
+  private def recordedStats(tags: Map[String, String]): Map[String, (Any, Any)] =
+    tags.get(StatsTag).fold(Map.empty[String, (Any, Any)]) { json =>
+      M.readTree(json).properties().asScala.flatMap { e =>
+        val b = e.getValue
+        if (b.size != 2) None
+        else if (b.get(0).isNumber && b.get(1).isNumber)
+          Some(e.getKey -> ((b.get(0).asDouble, b.get(1).asDouble)))
+        else if (b.get(0).isTextual && b.get(1).isTextual)
+          Some(e.getKey -> ((b.get(0).asText, b.get(1).asText)))
+        else None
+      }.toMap
+    }
 
   /** Conservative truncation of recorded string stat bounds, ASCII-only.
     *
     * Returns None — drop the stats, conservative include at prune time —
-    * unless both bounds are pure printable-range ASCII. The restriction is
-    * what makes the bounds SOUND: Spark computes min/max in UTF8_BINARY
-    * (code-point) order while the prune compares with java.lang.String
-    * (UTF-16) order, and the two disagree for supplementary characters;
-    * for ASCII-only stored bounds every comparison against ANY probe string
-    * agrees under both orders (at the first difference, a non-ASCII char
+    * unless both bounds are pure printable-range ASCII. Spark computes
+    * min/max, and the scan tests them, in UTF8_BINARY (code-point) order;
+    * against ASCII-only bounds every probe string also compares the same in
+    * java.lang.String (UTF-16) order, where the two orders disagree for
+    * supplementary characters (at the first difference, a non-ASCII char
     * sorts above ASCII in both). Truncation: the min keeps a prefix (≤ the
     * true min in any order); the max increments the last kept char
     * (strictly above every string sharing the prefix) — well-defined

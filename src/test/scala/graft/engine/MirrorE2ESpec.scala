@@ -2,6 +2,9 @@ package graft.engine
 
 import java.time.Instant
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.GraftManifestScan
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
@@ -30,6 +33,14 @@ class MirrorE2ESpec extends SparkSuite {
 
   private def ids(orch: MirrorOrchestrator): Seq[Long] =
     orch.table.snapshot().select("id").collect().map(_.getLong(0)).sorted.toSeq
+
+  /** The sorted ids of `df` and the files its scan read ("number of files
+    * read"; `Dataset.inputFiles` lists the whole manifest and shows no pruning).
+    */
+  private def idsAndFiles(df: DataFrame): (Seq[Long], Long) = {
+    val out = df.select("id")
+    (out.collect().map(_.getLong(0)).sorted.toSeq, GraftManifestScan.filesRead(out))
+  }
 
   test("one line one column (SimpleTest.cs:5-22)") {
     val (src, cfg) = setup("one")
@@ -336,7 +347,7 @@ class MirrorE2ESpec extends SparkSuite {
     // conservative include)
     assert(orch.table.liveAdds().head.tags.contains(
       graft.sink.MirrorTable.StatsTag))
-    assert(orch.table.snapshotRange("id", 100, 200).inputFiles.isEmpty)
+    assert(idsAndFiles(orch.table.snapshot().where(col("id").between(100, 200))) == ((Nil, 0L)))
 
     // small-file trigger, independent of the batch counter: a fresh
     // orchestrator (counter 0) with the count trigger compacts as soon as
@@ -374,9 +385,8 @@ class MirrorE2ESpec extends SparkSuite {
     val live = orch.table.liveAdds()
     assert(live.forall(_.partitionValues.nonEmpty))
     assert(live.map(_.partitionValues("year")).toSet == Set("1994", "1995"))
-    val pruned = orch.table.snapshotWhere(pv => pv.get("year").contains("1994"))
-    assert(pruned.select("id").collect().map(_.getLong(0)).sorted.toSeq == (0L until 6L))
-    assert(pruned.inputFiles.length < orch.table.snapshot().inputFiles.length)
+    assert(idsAndFiles(orch.table.snapshot().where(col("year") === 1994)) ==
+      ((0L until 6L, live.count(_.partitionValues("year") == "1994").toLong)))
     assert(ids(orch) == (0L until 12L))
 
     // clusterBy: rows inside each rewritten file are sorted by the key
@@ -429,7 +439,7 @@ class MirrorE2ESpec extends SparkSuite {
     assert(snap.filter(snap("year") === 1995).count() == 5)
   }
 
-  test("file stats: publish records min/max, snapshotRange prunes, clusterBy makes ranges disjoint") {
+  test("file stats: publish records min/max, range filters prune, clusterBy makes ranges disjoint") {
     val (src, cfgBase) = setup("stats")
     val cfg = cfgBase.copy(statsColumns = Seq("id"))
     src.init(idSchema)
@@ -444,12 +454,13 @@ class MirrorE2ESpec extends SparkSuite {
     assert(live.nonEmpty)
     assert(live.forall(a => orch.table.statsOf(a, "id").isDefined))
 
-    // range pruning: a [0,50] probe opens only the file(s) covering it
-    val pruned = orch.table.snapshotRange("id", 0, 50)
-    assert(pruned.inputFiles.length < orch.table.snapshot().inputFiles.length)
-    assert(pruned.filter("id <= 50").count() == 51)
-    // full-range probe sees everything
-    assert(orch.table.snapshotRange("id", 0, 299).count() == 300)
+    // range pruning: a [0,50] filter opens only the file(s) covering it
+    val (low, lowFiles) = idsAndFiles(orch.table.snapshot().where("id >= 0 and id <= 50"))
+    assert(low == (0L to 50L))
+    assert(lowFiles < live.size)
+    // full-range filter sees everything
+    assert(idsAndFiles(orch.table.snapshot().where("id between 0 and 299")) ==
+      ((0L until 300L, live.size.toLong)))
 
     // after a clusterBy OPTIMIZE the rewritten files keep disjoint ranges
     assert(orch.table.optimize(
@@ -460,10 +471,14 @@ class MirrorE2ESpec extends SparkSuite {
       case Seq((_, hi1), (lo2, _)) => assert(hi1 <= lo2, s"overlapping ranges: $ranges")
       case _                       =>
     }
-    assert(orch.table.snapshotRange("id", 0, 299).count() == 300)
+    assert(ids(orch) == (0L until 300L))
+    // disjoint ranges prune: the [0,50] filter reads only the files covering it
+    val (lowAfter, lowAfterFiles) = idsAndFiles(orch.table.snapshot().where("id <= 50"))
+    assert(lowAfter == (0L to 50L))
+    assert(lowAfterFiles < ranges.size, s"no pruning over $ranges")
   }
 
-  test("string-column stats: lexicographic bounds recorded, snapshotRangeString prunes") {
+  test("string-column stats: lexicographic bounds recorded, string range filters prune") {
     val (src, cfgBase) = setup("strstats")
     val cfg = cfgBase.copy(statsColumns = Seq("id", "cat"))
     val schema = StructType(Seq(StructField("id", LongType), StructField("cat", StringType)))
@@ -479,11 +494,11 @@ class MirrorE2ESpec extends SparkSuite {
     assert(live.forall(a => orch.table.strStatsOf(a, "cat").isDefined))
     assert(live.forall(a => orch.table.statsOf(a, "id").isDefined)) // mixed tag
 
-    // a ["a","c"] probe opens only the apple/berry file
-    val pruned = orch.table.snapshotRangeString("cat", "a", "c")
-    assert(pruned.inputFiles.length < orch.table.snapshot().inputFiles.length)
-    assert(pruned.filter($"cat" < "c").count() == 2)
-    assert(orch.table.snapshotRangeString("cat", "a", "zz").count() == 6)
+    // a ["a","c"] filter opens only the apple/berry file
+    val pruned = orch.table.snapshot().where($"cat" >= "a" && $"cat" <= "c")
+    assert(idsAndFiles(pruned) == ((Seq(1L, 2L), 1L)))
+    assert(idsAndFiles(orch.table.snapshot().where($"cat" >= "a" && $"cat" <= "zz")) ==
+      ((1L to 6L, live.size.toLong)))
 
     // truncation widening keeps long bounds conservative: min is a prefix,
     // max increments its last kept char (strictly above the whole prefix set)
@@ -550,9 +565,9 @@ class MirrorE2ESpec extends SparkSuite {
     // file-level metadata carries the partition values
     val live = orch.table.liveAdds()
     assert(live.forall(_.partitionValues.nonEmpty))
-    val pruned = orch.table.snapshotWhere(pv => pv.get("year").contains("1994"))
-    assert(pruned.count() == 5)
-    assert(pruned.inputFiles.length < orch.table.snapshot().inputFiles.length)
+    val in1994 = live.count(_.partitionValues("year") == "1994").toLong
+    assert(0 < in1994 && in1994 < live.size)
+    assert(idsAndFiles(orch.table.snapshot().where(col("year") === 1994)) == ((0L until 5L, in1994)))
   }
 
   test("continuous mode drains commits arriving between probes (§2.h)") {

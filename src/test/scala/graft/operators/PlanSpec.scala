@@ -462,4 +462,32 @@ class PlanSpec extends SparkSuite {
     // formatted mode marks codegen'd operators with a '*' prefix
     assert(s.contains("* Filter"), s"manifest scan fell out of codegen:\n$s")
   }
+
+  test("mirror reads prune files by the query's own filters, current and time-travelled") {
+    import org.apache.spark.sql.types._
+    val src = new graft.deltalog.TestDelta(spark, tmpDir("plan-prune-src"), "plan_prune")
+    src.init(StructType(Seq(StructField("id", LongType), StructField("part", StringType))), Seq("part"))
+    def addAll(): Unit = (0 until 4).foreach { i =>
+      src.addCommit(spark.range(i * 10, i * 10 + 10).toDF("id"), Map("part" -> s"p$i"))
+    }
+    val orch = new graft.engine.MirrorOrchestrator(spark, graft.engine.MirrorConfig(
+      src.dir, tmpDir("plan-prune-mirror"), "plan_prune", tmpDir("plan-prune-state")))
+    addAll()
+    orch.runOnce()
+    val v1     = orch.table.currentVersion()
+    val files1 = orch.table.liveAdds().size
+    addAll()
+    orch.runOnce()
+    val files2 = orch.table.liveAdds().size
+    assert(files1 >= 4 && files1 % 4 == 0 && files2 > files1, s"$files1 then $files2 files")
+
+    def read(t: org.apache.spark.sql.DataFrame): (Seq[Long], Long) = {
+      val df = graft.kql.KqlPipeline.run(Map("T" -> t), "T | where part == 'p1' | project id")
+      (df.collect().map(_.getLong(0)).sorted.toSeq,
+        org.apache.spark.sql.graftbridge.GraftManifestScan.filesRead(df))
+    }
+    val p1 = ((10L until 20L) ++ (10L until 20L)).sorted
+    assert(read(orch.table.snapshot()) == ((p1, files2 / 4L)))
+    assert(read(orch.table.snapshotAt(v1)) == ((10L until 20L, files1 / 4L)))
+  }
 }
