@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftManifestScan
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 import graft.deltalog.DeltaLogReader
 import graft.sink.MirrorTable
@@ -321,8 +321,9 @@ class MirrorOrchestrator(
     * straight to Done (P8/O4); remaining adds group by partition tuple (A4)
     * and each group is read + decorated + written to the batch staging dir.
     * Partition values are injected as constants (O6) — partition columns are
-    * never read from parquet. Lineage (`MLK_BlobPath`) comes from
-    * `input_file_name()`; `MLK_IngestTs` pins this ingest instance.
+    * never read from parquet. Lineage (`MLK_BlobPath`) is each add's
+    * recorded path, byte for byte, carried by the manifest scan as a
+    * per-file constant; `MLK_IngestTs` pins this ingest instance.
     */
   private def stageAdds(startTxId: Long): Unit =
       graft.util.PhaseTimer.time("orch.stage") {
@@ -357,35 +358,29 @@ class MirrorOrchestrator(
       // content-addressed by partition tuple, NOT positional: a crash-resume
       // restages only the unfinished groups into their original dirs
       val groupId = MirrorOrchestrator.groupId(pv)
-      val absByRel = adds.flatMap(_.blobPath).map { rel =>
-        MirrorTable.normalizePath(new Path(tableRoot, rel).toString) -> rel
-      }
-      import stagingSpark.implicits._
-      val mapping = absByRel.toDF("_abs", KustoTypes.BlobPathColumn)
+      val paths = adds.flatMap(a => a.blobPath.map(rel => (a, rel)))
       // manifest scan: the Delta log records every add's length, so the
       // group read hands Spark the file statuses directly — zero listing
       // (spark.read.parquet over 10⁵ explicit paths cost 380 s of
       // glob-status + distributed-listing jobs per 10⁶-blob batch). An add
-      // missing a size (legal but rare in real logs) makes the scan list the
-      // whole group — the manifest must never guess a length.
-      val scan: DataFrame = graft.util.PhaseTimer.time("stage.plan")(GraftManifestScan.parquet(
-        stagingSpark, physicalSchema, adds.flatMap(a => a.blobPath.map(rel => GraftManifestScan.status(
-          new Path(tableRoot, rel), a.size.getOrElse(0L), a.deltaTimestamp.map(_.toEpochMilli).getOrElse(0L))))))
-      var df: DataFrame = scan
-        .withColumn("_abs", MirrorTable.normalizePathCol(input_file_name()))
-        .join(broadcast(mapping), Seq("_abs"), "left")
-        .drop("_abs")
+      // missing a size (legal but rare in real logs) costs one driver stat.
+      var df: DataFrame = graft.util.PhaseTimer.time("stage.plan")(GraftManifestScan.parquet(
+        stagingSpark, physicalSchema, paths.map { case (a, rel) => GraftManifestScan.status(
+          new Path(tableRoot, rel), a.size.getOrElse(0L), a.deltaTimestamp.map(_.toEpochMilli).getOrElse(0L)) },
+        constantSchema = StructType(Seq(StructField(KustoTypes.BlobPathColumn, StringType))),
+        constants = paths.map { case (_, rel) => Seq(rel) }))
       // O6: partition values as typed constants
       pcols.foreach { c =>
         val t = schema.fields.find(_.name == c).map(_.dataType)
-          .getOrElse(org.apache.spark.sql.types.StringType)
+          .getOrElse(StringType)
         df = df.withColumn(c, lit(pv.get(c).orNull).cast(t))
       }
       df = df.withColumn(KustoTypes.IngestTsColumn, lit(ingestTs))
         // stable column order = mirror schema order
         .select(KustoTypes.withTrackingColumns(schema).fields.map(f => col(f.name)).toIndexedSeq: _*)
 
-      graft.util.PhaseTimer.time("mirror.stage")(mirror.stage(stagingName, groupId, df))
+      graft.util.PhaseTimer.time("mirror.stage")(
+        mirror.stage(stagingName, groupId, df, pv, config.statsColumns))
       write(adds.map(a => a.copy(
         state = TxState.Staged,
         mirrorTimestamp = now(),
@@ -413,17 +408,16 @@ class MirrorOrchestrator(
     // publish staged adds (one metadata-only commit, O11)
     val toLoad = batch.adds.filter(_.state == TxState.Staged)
     if (toLoad.nonEmpty) {
-      if (!mirror.stagingExists(stagingName)) {
-        // reset path (DeltaTableOrchestration.cs:181-200): staging vanished
-        // mid-batch — send the adds back to Analyzed and re-stage.
-        write(toLoad.map(_.withState(TxState.Analyzed, now())))
+      def group(a: TransactionItem) = MirrorOrchestrator.groupId(a.partitionValues.getOrElse(Map.empty))
+      val groups = toLoad.map(group).distinct
+      val lost   = groups.filterNot(mirror.isStaged(stagingName, _)).toSet
+      if (lost.nonEmpty) {
+        // reset path (DeltaTableOrchestration.cs:181-200): a group's staging
+        // vanished mid-batch — send its adds back to Analyzed and re-stage.
+        write(toLoad.filter(a => lost(group(a))).map(_.withState(TxState.Analyzed, now())))
         stageAdds(startTxId)
       }
-      val pvByGroup = batch.adds
-        .map(_.partitionValues.getOrElse(Map.empty[String, String])).distinct
-        .map(pv => MirrorOrchestrator.groupId(pv) -> pv).toMap
-      graft.util.PhaseTimer.time("mirror.publish")(
-        mirror.publishStaged(stagingName, pvByGroup, config.statsColumns))
+      graft.util.PhaseTimer.time("mirror.publish")(mirror.publishStaged(stagingName, groups))
     }
 
     // resolve + apply removes

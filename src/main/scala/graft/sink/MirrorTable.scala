@@ -1,5 +1,6 @@
 package graft.sink
 
+import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
@@ -10,8 +11,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftManifestScan
-import org.apache.spark.sql.types.{DoubleType, NumericType, StringType, StructType}
+import org.apache.spark.sql.graftbridge.{GraftFileWriter, GraftManifestScan}
+import org.apache.spark.sql.types.{DoubleType, LongType, NumericType, StringType, StructField, StructType}
 
 import graft.deltalog.{DeltaLogReader, DeltaLogWriter}
 import graft.txlog.{TransactionItem, TxLog}
@@ -36,7 +37,8 @@ import graft.types.KustoTypes
   * TableDefinition.cs:16) and `MLK_IngestTs` (this engine's analog of Kusto
   * `ingestion_time()`), so deletes pin the exact ingested instance (O12).
   * Each published file's add-action records the set of source blobs it holds
-  * (in add.tags), so a delete rewrites only the files that actually contain
+  * (in add.tags), gathered by the staging write itself as the rows stream
+  * through it, so a delete rewrites only the files that actually contain
   * the doomed lineage — O(affected files), like the extent-targeted
   * `.delete table records` (S12).
   */
@@ -79,44 +81,68 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   private def metaOf(m: TransactionItem): (StructType, Seq[String]) =
     (KustoTypes.structFrom(m.schema.getOrElse(Seq.empty)), m.partitionColumns.getOrElse(Seq.empty))
 
-  /** Staging area of one batch attempt (S13) — final location, pre-publish. */
-  def stagingDir(stagingName: String): Path = new Path(dataPath, stagingName)
+  private def groupDir(stagingName: String, groupId: String): Path =
+    new Path(new Path(dataPath, stagingName), groupId)
 
-  def stagingExists(stagingName: String): Boolean = fs.exists(stagingDir(stagingName))
+  private def addsFile(stagingName: String, groupId: String): Path =
+    new Path(groupDir(stagingName, groupId), AddsFile)
 
-  /** Write one partition-group's rows under the batch staging area
-    * (invisible until publish). Overwrite-idempotent per (staging, group).
+  /** Whether a group's staging finished: its add actions are recorded. */
+  def isStaged(stagingName: String, groupId: String): Boolean = fs.exists(addsFile(stagingName, groupId))
+
+  /** Write one partition group's rows under the batch staging area
+    * (invisible until publish) in ONE Spark job, and return the group's add
+    * actions, also written to `<group>/_adds.json`. The write itself records
+    * each file's source blobs, row count and `statsColumns` min/max, so
+    * nothing re-reads or lists what it wrote. Overwrite-idempotent per
+    * (staging, group): the group directory is cleared first.
     */
-  def stage(stagingName: String, groupId: String, df: DataFrame): Unit = {
-    val target = new Path(stagingDir(stagingName), groupId)
-    df.write.mode("overwrite").parquet(target.toString)
+  def stage(
+      stagingName: String,
+      groupId: String,
+      df: DataFrame,
+      partitionValues: Map[String, String] = Map.empty,
+      statsColumns: Seq[String] = Nil): Seq[String] = {
+    val dir   = groupDir(stagingName, groupId)
+    val stats = statsColumns.distinct.filter(df.columns.contains)
+    fs.delete(dir, true)
+    val written = GraftFileWriter.parquet(df, dir, KustoTypes.BlobPathColumn, stats.filter { c =>
+      df.schema(c).dataType == StringType || df.schema(c).dataType.isInstanceOf[NumericType]
+    })
+    faultHook("stage.data-written")
+    val actions = written.map(f =>
+      addFor(s"data/$stagingName/$groupId/${f.path.getName}", f, partitionValues, stats))
+    val tmp = new Path(dir, s"._adds.json.tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, false)
+    try out.write(actions.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    if (!fs.rename(tmp, addsFile(stagingName, groupId)))
+      throw new IllegalStateException(s"Failed to record the staged adds of $dir")
+    faultHook("stage.adds-written")
+    actions
   }
 
-  /** Publish everything staged under `stagingName` in ONE commit: a single
-    * distributed pass recovers per-file lineage (source blobs + row count),
-    * then the commit rename flips visibility. Files already live (a retry
-    * after a crash between commit and state-persist) are skipped.
+  /** Publish the staged groups `groupIds` of `stagingName` in ONE commit of
+    * the add actions their staging recorded — no listing, no Spark job; the
+    * commit rename flips visibility. Files already live (a retry after a
+    * crash between commit and state-persist) are skipped. A named group
+    * whose staging never finished fails loudly.
     * Returns the commit version, or -1 if nothing new to publish.
     */
-  def publishStaged(
-      stagingName: String,
-      pvByGroup: Map[String, Map[String, String]] = Map.empty,
-      statsColumns: Seq[String] = Nil): Long = {
-    val stg = stagingDir(stagingName)
-    if (!fs.exists(stg)) return -1L
-    val files = graft.util.PhaseTimer.time("publish.list")(listParquet(stg))
-    if (files.isEmpty) return -1L
-
-    val live = graft.util.PhaseTimer.time("publish.live")(liveAdds().map(_.path).toSet)
-    val fresh = files.filterNot(f => live.contains(relPath(f.getPath)))
+  def publishStaged(stagingName: String, groupIds: Seq[String]): Long = {
+    val staged = groupIds.distinct.flatMap { g =>
+      val f = addsFile(stagingName, g)
+      if (!fs.exists(f))
+        throw new IllegalStateException(s"Staging group $g of $stagingName has no recorded adds ($f)")
+      val in = fs.open(f)
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8).split('\n').filter(_.nonEmpty).toSeq
+      finally in.close()
+    }
+    val live  = graft.util.PhaseTimer.time("publish.live")(liveAdds().map(_.path).toSet)
+    val fresh = staged.filterNot(a => live.contains(M.readTree(a).get("add").get("path").asText))
     if (fresh.isEmpty) return -1L
-
-    val lineage = graft.util.PhaseTimer.time("publish.lineage")(
-      lineageOf(fresh, statsColumns))
-    // partition values recorded per file (keyed by the staging group dir)
-    // → metadata-only partition pruning at read time, like Kusto extents
-    val actions = fresh.map(f => addFor(f, pvByGroup.getOrElse(f.getPath.getParent.getName, Map.empty), lineage))
-    val v = graft.util.PhaseTimer.time("publish.commit")(writer.commit(actions))
+    faultHook("publish.pre-commit")
+    val v = graft.util.PhaseTimer.time("publish.commit")(writer.commit(fresh))
+    faultHook("publish.committed")
     maybeCheckpoint(v)
     v
   }
@@ -150,9 +176,10 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   }
 
   /** Rewrite each partition group's live files through `rewrite` and commit,
-    * in ONE commit, their removes plus the rewritten files, which keep their
-    * group's partition values and the stat columns their inputs carried (as
-    * well as `statsColumns`), so file pruning keeps working.
+    * in ONE commit, their removes plus the add actions the rewrite's staging
+    * returned; the rewritten files keep their group's partition values and
+    * the stat columns their inputs carried (as well as `statsColumns`), so
+    * file pruning keeps working.
     *
     * One rewrite job per group, not per file — a delete touching 10k files
     * submits tens of group jobs (bounded-parallel), each reading all its
@@ -169,20 +196,14 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
       statsColumns: Seq[String],
       parallelism: Int)(rewrite: (DataFrame, Seq[LiveFile]) => DataFrame): Long = {
     val stagingName = s"$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
-    val meta = tableMeta()
-    val staged = graft.util.BoundedPar.run(groups.zipWithIndex, parallelism) {
+    val meta  = tableMeta()
+    val stats = (statsColumns ++ groups.flatMap(_._2).flatMap(a => statKeys(a.tags))).distinct
+    val actions = graft.util.BoundedPar.run(groups.zipWithIndex, parallelism) {
       case ((pv, adds), i) =>
-        stage(stagingName, s"g$i", rewrite(manifestRead(meta, adds), adds))
-        (pv, adds, listParquet(new Path(stagingDir(stagingName), s"g$i")))
+        adds.map(a => writer.removeAction(a.path, Some(a.partitionValues))) ++
+          stage(stagingName, s"g$i", rewrite(manifestRead(meta, adds), adds), pv, stats)
     }
-    val newFiles = staged.flatMap(_._3)
-    val inherited = groups.flatMap(_._2).flatMap(a => recordedStats(a.tags).keys)
-    val lineage  = if (newFiles.isEmpty) Map.empty[String, FileMeta]
-                   else lineageOf(newFiles, (statsColumns ++ inherited).distinct)
-    val v = writer.commit(staged.flatMap { case (pv, adds, files) =>
-      adds.map(a => writer.removeAction(a.path, Some(a.partitionValues))) ++
-        files.map(f => addFor(f, pv, lineage))
-    })
+    val v = writer.commit(actions.flatten)
     maybeCheckpoint(v)
     v
   }
@@ -197,7 +218,10 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     * Compaction is PER PARTITION GROUP: rewrites keep their inputs'
     * partition values, so file-level partition pruning survives OPTIMIZE
     * (compacting across partitions would erase the values and force every
-    * pruned read to conservatively include the compacted files).
+    * pruned read to conservatively include the compacted files). A group of
+    * one small file is rewritten only when its stats tag lacks a requested
+    * stats or `clusterBy` column — a column with no usable bound is recorded
+    * as null, so such a file is not rewritten again.
     *
     * `clusterBy` additionally range-partitions each group's rows on the
     * given columns before writing — output files then carry disjoint
@@ -211,9 +235,10 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
       targetFileBytes: Long = 128L * 1024 * 1024,
       clusterBy: Seq[String] = Nil,
       statsColumns: Seq[String] = Nil): Long = {
+    val wanted = (statsColumns ++ clusterBy).filter(tableMeta()._1.fieldNames.contains)
     val groups = liveAdds().filter(_.size < smallFileBytes)
       .groupBy(_.partitionValues)
-      .filter(_._2.size >= 2)
+      .filter { case (_, files) => files.size >= 2 || files.exists(f => !wanted.forall(statKeys(f.tags))) }
       .toSeq
       .sortBy(_._1.toSeq.sorted.mkString(","))
     if (groups.isEmpty) return -1L
@@ -270,10 +295,13 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   }
 
   private def vacuumFull(cutoff: Long): Int = {
-    val live = liveAdds().map(a => normalizePath(new Path(root, a.path).toString)).toSet
+    val live = liveAdds().map(a => fs.makeQualified(new Path(root, a.path))).toSet
+    if (!fs.exists(dataPath)) return 0
     var deleted = 0
-    listParquet(dataPath).foreach { f =>
-      if (!live.contains(normalizePath(f.getPath.toString))
+    val it = fs.listFiles(dataPath, true)
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.getPath.getName.endsWith(".parquet") && !live.contains(fs.makeQualified(f.getPath))
           && f.getModificationTime < cutoff) {
         fs.delete(f.getPath, false)
         deleted += 1
@@ -354,7 +382,11 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     * were recorded in. The tag is decoded only when a filter names such a
     * column.
     */
-  private def manifestRead(meta: (StructType, Seq[String]), files: Seq[LiveFile]): DataFrame = {
+  private def manifestRead(
+      meta: (StructType, Seq[String]),
+      files: Seq[LiveFile],
+      constantSchema: StructType = StructType(Nil),
+      constants: Seq[Seq[Any]] = Nil): DataFrame = {
     val (schema, pcols) = meta
     val boundTypes = schema.fields.collect {
       case f if f.dataType == StringType => f.name -> StringType
@@ -372,7 +404,8 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     }
     GraftManifestScan.parquet(spark, schema,
       files.map(a => GraftManifestScan.status(new Path(root, a.path), a.size)),
-      boundTypes = boundTypes, bounds = files.map(bounds))
+      boundTypes = boundTypes, bounds = files.map(bounds),
+      constantSchema = constantSchema, constants = constants)
   }
 
   /** Time travel: the table exactly as of sink-log commit `version` —
@@ -411,8 +444,9 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     * since snapshot N" feed an incremental training pipeline consumes
     * instead of diffing snapshots. Row deletes surface as file rewrites;
     * their removed files are listed by [[removedBetween]]. One distributed
-    * read over exactly the added files plus a broadcast file→version map;
-    * like [[snapshotAt]], reach is bounded by vacuum retention.
+    * read over exactly the added files, each carrying its version as a
+    * constant column; like [[snapshotAt]], reach is bounded by vacuum
+    * retention.
     */
   def changesBetween(fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
@@ -421,30 +455,21 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     val logs = reader.readCommits(reader.listCommits(fromVersion + 1, toVersion))
     // a path re-added at multiple versions inside the range yields ONE row
     // per data row, tagged with the LATEST introducing commit — matching the
-    // manifest scan's last-entry-wins read of the file; without this dedup
-    // the version join fanned each row out once per re-add (round-14 advice)
+    // manifest scan's last-entry-wins read of the file
     val added = logs.flatMap { l =>
       l.adds.filter(_.blobPath.isDefined).map(a => (LiveFile.of(a), l.startTxId))
-    }.groupBy(t => normalizePath(new Path(root, t._1.path).toString))
-      .valuesIterator.map(_.maxBy(_._2)).toSeq.sortBy(_._2)
-    val fileToV = added.map { case (a, v) =>
-      normalizePath(new Path(root, a.path).toString) -> v
-    }
+    }.groupBy(_._1.path).valuesIterator.map(_.maxBy(_._2)).toSeq.sortBy(_._2)
     // a range reaching vacuumed history must fail with the CONTRACT, not a
     // raw PATH_NOT_FOUND from the scan (metadata-bounded existence check)
-    val vacuumed = fileToV.collect {
-      case (p, v) if !fs.exists(new Path(p)) => s"$p (commit $v)"
+    val vacuumed = added.collect {
+      case (a, v) if !fs.exists(new Path(root, a.path)) => s"${new Path(root, a.path)} (commit $v)"
     }
     if (vacuumed.nonEmpty)
       throw new IllegalStateException(
         s"changesBetween($fromVersion, $toVersion) reaches ${vacuumed.size} file(s) already " +
           s"reclaimed by VACUUM — narrow the range or raise vacuum retention. First: ${vacuumed.head}")
-    import spark.implicits._
-    val mapping = fileToV.toDF("_abs", KustoTypes.CommitVersionColumn)
-    manifestRead(meta, added.map(_._1))
-      .withColumn("_abs", normalizePathCol(input_file_name()))
-      .join(broadcast(mapping), Seq("_abs"))
-      .drop("_abs")
+    manifestRead(meta, added.map(_._1),
+      StructType(Seq(StructField(KustoTypes.CommitVersionColumn, LongType))), added.map(t => Seq(t._2)))
   }
 
   /** The file-level remove side of [[changesBetween]]: (version, path) of
@@ -475,86 +500,38 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   private def tableMeta(): (StructType, Seq[String]) = currentMeta().getOrElse(
     throw new IllegalStateException(s"Mirror table $name has no schema commit"))
 
-  private def relPath(p: Path): String =
-    normalizePath(p.toString).stripPrefix(normalizePath(root.toString)).stripPrefix("/")
-
-  /** Recursive parquet listing returning the full statuses: callers need
-    * (path, len, mtime) and a per-file `getFileStatus` round-trip on top of
-    * the listing doubles the metadata ops at 10⁴⁺ staged files.
-    */
-  private def listParquet(dirPath: Path): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
-    if (!fs.exists(dirPath)) return Seq.empty
-    val out = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-    val it  = fs.listFiles(dirPath, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) out += f
-    }
-    out.result()
-  }
-
-  /** One distributed job: per staged file → (source blobs, row count, and —
-    * when `statsCols` is non-empty — per-column min/max for data skipping).
-    * Columns absent from the table schema are skipped silently.
-    * Takes the statuses the caller already holds from its staging listing —
-    * a manifest scan, so publish never re-lists or schema-infers what it
-    * just wrote.
-    */
-  private def lineageOf(
-      files: Seq[org.apache.hadoop.fs.FileStatus],
-      statsCols: Seq[String] = Nil): Map[String, FileMeta] = {
-    val df    = GraftManifestScan.parquet(spark, tableMeta()._1, files)
-    val stats = statsCols.filter(df.columns.contains)
-    // string columns keep lexicographic string bounds; everything else goes
-    // through the numeric double path
-    def bounded(c: String) = if (df.schema(c).dataType == StringType) col(c) else col(c).cast("double")
-    val statAggs = stats.flatMap(c => Seq(min(bounded(c)).as(s"_min_$c"), max(bounded(c)).as(s"_max_$c")))
-    val base = Seq(
-      collect_set(col(KustoTypes.BlobPathColumn)).as("blobs"), count(lit(1)).as("rows"))
-    df.groupBy(normalizePathCol(input_file_name()).as("_file"))
-      .agg(base.head, (base.tail ++ statAggs): _*)
-      .collect()
-      .map { r =>
-        val bounds = stats.flatMap { c =>
-          (r.getAs[Any](s"_min_$c"), r.getAs[Any](s"_max_$c")) match {
-            case (mn: String, mx: String) => truncateBounds(mn, mx).map(c -> _)
-            // NaN/Infinity would serialize to invalid JSON and poison every
-            // later decode of the tag — drop the column's stats for this file
-            // (conservative include at prune time) instead
-            case (lo: Double, hi: Double) if java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi) =>
-              // the double cast rounds 64-bit integers beyond 2^53 — possibly
-              // INWARD, which would let the scan prune a file that holds
-              // matching rows. Widen one ulp outward to keep the recorded
-              // range a superset of the true range (skip at ±MaxValue where
-              // widening would leave the finite domain).
-              val loW = { val w = Math.nextDown(lo); if (java.lang.Double.isFinite(w)) w else lo }
-              val hiW = { val w = Math.nextUp(hi); if (java.lang.Double.isFinite(w)) w else hi }
-              Some(c -> ((loW, hiW)))
-            case _ => None
-          }
-        }.toMap
-        r.getString(0) -> FileMeta(r.getSeq[String](1), r.getLong(2), bounds)
-      }
-      .toMap
-  }
-
-  /** The add action of one staged file. Its tags are the source-blob lineage
-    * plus optional min/max stats (JSON: {"col":[min,max],...} — numbers for
-    * numeric columns, JSON strings for string columns; keys sorted for
-    * determinism).
+  /** The add action of one written file. Its tags are the source-blob
+    * lineage plus, when `statsColumns` is non-empty, their min/max (JSON:
+    * {"col":[min,max],...} — numbers for numeric columns, JSON strings for
+    * string columns, null for a column without a usable bound; keys sorted
+    * for determinism). Numeric bounds are doubles widened one ulp outward;
+    * NaN or infinite bounds would serialize to invalid JSON and are null.
     */
   private def addFor(
-      f: org.apache.hadoop.fs.FileStatus, pv: Map[String, String], lineage: Map[String, FileMeta]): String = {
-    val meta = lineage.getOrElse(normalizePath(f.getPath.toString), FileMeta(Seq.empty, 0L))
-    val lineageTag = Map(SourceBlobsTag -> M.writeValueAsString(meta.blobs.toArray))
-    val tags = if (meta.stats.isEmpty) lineageTag else {
+      rel: String, f: GraftFileWriter.WrittenFile, pv: Map[String, String], statsColumns: Seq[String]): String = {
+    val lineageTag = Map(SourceBlobsTag -> M.writeValueAsString(f.distinct.toArray))
+    val tags = if (statsColumns.isEmpty) lineageTag else {
       val node = M.createObjectNode()
-      meta.stats.toSeq.sortBy(_._1).foreach { case (c, (mi, ma)) =>
-        node.set[JsonNode](c, M.valueToTree[JsonNode](Array(mi, ma)))
+      statsColumns.sorted.foreach { c =>
+        f.bounds.get(c).flatMap {
+          case (mn: String, mx: String) => truncateBounds(mn, mx)
+          case (lo: Double, hi: Double) if java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi) =>
+            // the double cast rounds 64-bit integers beyond 2^53 — possibly
+            // INWARD, which would let the scan prune a file that holds
+            // matching rows (skip at ±MaxValue, where widening would leave
+            // the finite domain)
+            val loW = { val w = Math.nextDown(lo); if (java.lang.Double.isFinite(w)) w else lo }
+            val hiW = { val w = Math.nextUp(hi); if (java.lang.Double.isFinite(w)) w else hi }
+            Some((loW, hiW))
+          case _ => None
+        } match {
+          case Some((mi, ma)) => node.set[JsonNode](c, M.valueToTree[JsonNode](Array(mi, ma)))
+          case None           => node.putNull(c)
+        }
       }
       lineageTag + (StatsTag -> M.writeValueAsString(node))
     }
-    writer.addAction(relPath(f.getPath), f.getLen, pv, Some(meta.rows), tags = tags)
+    writer.addAction(rel, f.size, pv, Some(f.rows), tags = tags)
   }
 
   // test hook: I/O accounting for rebuild-cost assertions
@@ -625,10 +602,18 @@ object MirrorTable {
       a.partitionValues.getOrElse(Map.empty), a.size.getOrElse(0L), a.tags.getOrElse(Map.empty))
   }
 
-  /** Per-file publish metadata from one lineage job; `stats` as
-    * [[recordedStats]] decodes them.
+  /** Name of the file, in each staged group's directory, holding the group's
+    * add actions, one JSON line each, exactly as they are committed.
     */
-  final case class FileMeta(blobs: Seq[String], rows: Long, stats: Map[String, (Any, Any)] = Map.empty)
+  private val AddsFile = "_adds.json"
+
+  /** Test-only fault injection, shaped like `CheckpointStore.faultHook`:
+    * invoked after a group's data write (`stage.data-written`), after its
+    * `_adds.json` (`stage.adds-written`), and before and after publish's
+    * commit (`publish.pre-commit`, `publish.committed`). A throwing hook
+    * aborts the operation where a kill would. Production leaves the no-op.
+    */
+  @volatile private[graft] var faultHook: String => Unit = _ => ()
 
   /** The `graft.stats` tag of a file decoded: column → (min, max), Doubles
     * for numeric columns and Strings for string columns. Every reader of the
@@ -647,30 +632,29 @@ object MirrorTable {
       }.toMap
     }
 
-  /** Conservative truncation of recorded string stat bounds, ASCII-only.
-    *
-    * Returns None — drop the stats, conservative include at prune time —
-    * unless both bounds are pure printable-range ASCII. Spark computes
-    * min/max, and the scan tests them, in UTF8_BINARY (code-point) order;
-    * against ASCII-only bounds every probe string also compares the same in
-    * java.lang.String (UTF-16) order, where the two orders disagree for
-    * supplementary characters (at the first difference, a non-ASCII char
-    * sorts above ASCII in both). Truncation: the min keeps a prefix (≤ the
-    * true min in any order); the max increments the last kept char
-    * (strictly above every string sharing the prefix) — well-defined
-    * because ASCII < 0x7F always has an ASCII successor.
+  /** The columns a file's `graft.stats` tag names, null bounds included. */
+  private def statKeys(tags: Map[String, String]): Set[String] =
+    tags.get(StatsTag).fold(Set.empty[String])(M.readTree(_).properties().asScala.map(_.getKey).toSet)
+
+  /** Conservative truncation of recorded string stat bounds to `cap` code
+    * points. Spark computes min/max, and the scan tests them, in UTF8_BINARY
+    * order, which is code-point order, so truncation works on code points:
+    * the min keeps a prefix (≤ the true min); the max keeps a prefix and
+    * increments its last code point, stepping over the surrogate range
+    * (strictly above every string sharing the prefix). Returns None — no
+    * usable bound — only when that code point is U+10FFFF, which has no
+    * successor.
     */
   private[graft] def truncateBounds(
       mn: String, mx: String, cap: Int = 64): Option[(String, String)] = {
-    def asciiOk(s: String) = s.forall(c => c >= ' ' && c <= '~')
-    if (!asciiOk(mn) || !asciiOk(mx)) None
+    def prefix(s: String) = s.substring(0, s.offsetByCodePoints(0, math.min(cap, s.codePointCount(0, s.length))))
+    if (mx.codePointCount(0, mx.length) <= cap) Some((prefix(mn), mx))
     else {
-      val lo = if (mn.length > cap) mn.take(cap) else mn
-      if (mx.length <= cap) Some((lo, mx))
-      else {
-        val t = mx.take(cap)
-        Some((lo, t.init + (t.last + 1).toChar))
-      }
+      val t    = prefix(mx)
+      val last = t.codePointBefore(t.length)
+      if (last == Character.MAX_CODE_POINT) None
+      else Some((prefix(mn), t.substring(0, t.length - Character.charCount(last)) +
+        Character.toString(if (last == Character.MIN_SURROGATE - 1) Character.MAX_SURROGATE + 1 else last + 1)))
     }
   }
 
@@ -688,16 +672,4 @@ object MirrorTable {
     StructType(existing.fields.toSeq ++ incoming.fields.filterNot(f => byName.contains(f.name)))
   }
 
-  /** Strip scheme+authority so `input_file_name()` output and
-    * driver-constructed URIs compare equal across `file:/` vs `file:///`
-    * normalization differences.
-    */
-  def normalizePath(s: String): String =
-    s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", "")
-      .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/", "/")
-
-  def normalizePathCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(
-      regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:/", "/")
 }

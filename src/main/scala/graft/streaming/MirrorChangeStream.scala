@@ -110,7 +110,7 @@ class MirrorChangeStream(
           else df
         val stagingName = f"cdc-$sourceHash-$to%012d"
         target.stage(stagingName, "g-default", fresh.drop(vCol))
-        target.publishStaged(stagingName)
+        target.publishStaged(stagingName, Seq("g-default"))
       }
       ()
     }

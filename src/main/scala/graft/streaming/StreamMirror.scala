@@ -16,8 +16,8 @@ import graft.types.KustoTypes
   *  - the staging dir name is derived from `batchId`, so a post-crash replay
   *    of the same micro-batch re-stages the SAME paths;
   *  - a replayed batch whose files already published is detected up front
-  *    (live-path prefix check) and skips straight to the idempotent publish
-  *    ([[MirrorTable.publishStaged]] ignores already-live files).
+  *    (live-path prefix check) and skipped: its one publish commit made every
+  *    file of the batch live at once.
   *
   * This is the streaming twin of the reference's 5 s poll loop, with
   * Spark owning triggers: `Trigger.AvailableNow` = the one-shot drain,
@@ -100,8 +100,8 @@ object StreamMirror {
               when(input_file_name() =!= "", input_file_name()).otherwise(lit(streamTag)))
             .withColumn(KustoTypes.IngestTsColumn, lit(ingestTs))
           mirror.stage(stagingName, "g-default", decorated)
+          mirror.publishStaged(stagingName, Seq("g-default"))
         }
-        mirror.publishStaged(stagingName)
         ()
       }
       .start()

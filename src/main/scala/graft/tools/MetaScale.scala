@@ -65,14 +65,14 @@ object MetaScale {
 
   /** In-record host-IO floor probe (r16 verdict #1): the per-file
     * open+footer cost — a footer-only count over a manifest scan of the
-    * first `nProbe` blob files, the same shape as StageProfile's
-    * `footer_only` phase. The r15→r16 1M E2E moved 337.6 → 481-488 s on
+    * first `nProbe` blob files, the staged-read floor: opening a file and
+    * reading its footer. The r15→r16 1M E2E moved 337.6 → 481-488 s on
     * UNCHANGED mirror code purely with this floor (33.3 → 50.5 s at 100k
     * files, measured by hand-run probes); running the probe INSIDE the
     * record, immediately before and after the E2E, makes every committed
     * meta number self-normalizing instead of needing a prose adjudication.
     * Two reps, min (the first rep warms the FS metadata cache — the honest
-    * steady floor, matching StageProfile's discipline).
+    * steady floor).
     */
   def ioFloorSec(spark: SparkSession, blobTable: String, nProbe: Int): Double = {
     val root = new Path(blobTable)

@@ -1,7 +1,7 @@
 package graft.util
 
-/** Shared wall-clock helper for the tools mains (previously copy-pasted in
-  * MetaScale / MultiScale / MetaSteady / StageProfile — round-15 review).
+/** Shared wall-clock helper for the tools mains (MetaScale, MultiScale,
+  * MetaSteady), which each had their own copy before.
   */
 object Timed {
   def timed[T](f: => T): (T, Double) = {

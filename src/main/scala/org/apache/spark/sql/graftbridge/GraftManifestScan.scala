@@ -41,9 +41,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * read" metric; `Dataset.inputFiles` still reports the whole manifest,
   * because it asks the index for every file, not for the filtered listing.
   *
-  * This file and [[GraftColumnBridge]] are the only internal-API touchpoints:
-  * `FileIndex`/`HadoopFsRelation`/`Dataset.ofRows` and the parquet footer
-  * reader of [[footerSchema]] are `private[sql]`-adjacent.
+  * This file, [[GraftFileWriter]] and [[GraftColumnBridge]] are the only
+  * internal-API touchpoints: `FileIndex`/`HadoopFsRelation`/`Dataset.ofRows`
+  * and the parquet footer reader of [[footerSchema]] are
+  * `private[sql]`-adjacent.
   */
 object GraftManifestScan {
 
@@ -54,31 +55,37 @@ object GraftManifestScan {
   type FileBounds = Seq[String] => Map[String, (Any, Any)]
 
   private final class ManifestFileIndex(
-      files: Seq[(FileStatus, FileBounds)],
-      boundTypes: Map[String, DataType]) extends FileIndex {
+      files: Seq[(FileStatus, FileBounds, InternalRow)],
+      boundTypes: Map[String, DataType],
+      constantSchema: StructType) extends FileIndex {
     override def rootPaths: Seq[Path] = files.map(_._1.getPath)
     override def inputFiles: Array[String] = files.map(_._1.getPath.toString).toArray
     override def refresh(): Unit = ()
     override def sizeInBytes: Long = files.map(_._1.getLen).sum
-    override def partitionSchema: StructType = StructType(Nil)
+    override def partitionSchema: StructType = constantSchema
 
-    /** Every file whose bounds may satisfy the data filters: a file is dropped
-      * only when its test is false, and unknown bounds make the test null.
+    /** Every file whose constants pass the partition filters and whose bounds
+      * may satisfy the data filters. Spark does not re-apply a filter on
+      * constants alone after the scan, so that test is exact; the bounds test
+      * drops a file only when it is false, and unknown bounds make it null.
       */
     override def listFiles(
         partitionFilters: Seq[Expression],
         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
       val (test, cols) = skippingTest(dataFilters, boundTypes)
-      val kept = if (cols.isEmpty) files else {
-        val keep = Predicate.createInterpreted(Coalesce(Seq(test, Literal.TrueLiteral)))
-        files.filter { case (_, bounds) =>
-          val known = bounds(cols)
-          keep.eval(InternalRow.fromSeq(cols.flatMap(c => known.get(c).fold(Seq[Any](null, null)) {
-            case (mn, mx) => Seq(mn, mx).map(CatalystTypeConverters.convertToCatalyst)
-          })))
-        }
+      val keep = Predicate.createInterpreted(And(Coalesce(Seq(test, Literal.TrueLiteral)),
+        partitionFilters.foldLeft[Expression](Literal.TrueLiteral)(And).transform {
+          case a: AttributeReference => BoundReference(
+            2 * cols.size + constantSchema.indexWhere(_.name.equalsIgnoreCase(a.name)), a.dataType, nullable = true)
+        }))
+      val kept = if (cols.isEmpty && partitionFilters.isEmpty) files else files.filter { case (_, bounds, values) =>
+        val known = bounds(cols)
+        keep.eval(InternalRow.fromSeq(cols.flatMap(c => known.get(c).fold(Seq[Any](null, null)) {
+          case (mn, mx) => Seq(mn, mx).map(CatalystTypeConverters.convertToCatalyst)
+        }) ++ values.toSeq(constantSchema)))
       }
-      Seq(PartitionDirectory(InternalRow.empty, kept.map(_._1).toArray))
+      if (constantSchema.isEmpty) Seq(PartitionDirectory(InternalRow.empty, kept.map(_._1).toArray))
+      else kept.map { case (f, _, values) => PartitionDirectory(values, Array(f)) }
     }
   }
 
@@ -151,8 +158,13 @@ object GraftManifestScan {
     * column's own type, or DoubleType for numeric min/max kept as doubles.
     * Without them every file is read.
     *
-    * A non-positive length (a log that did not record one) makes the whole
-    * read a listed one, unpruned.
+    * `constants`, when given, holds one value per `constantSchema` column
+    * for each file: the frame carries them as columns, like partition values
+    * (e.g. the source path the log records for the file), and filters on
+    * them select files.
+    *
+    * A non-positive length (a log that did not record one) is read with one
+    * driver `getFileStatus` for that file, never guessed.
     *
     * Duplicate paths are deduplicated (last entry wins). This is an ENGINE
     * guarantee, deliberately stronger than `spark.read.parquet(p, p)` —
@@ -166,20 +178,25 @@ object GraftManifestScan {
       files: Seq[FileStatus],
       options: Map[String, String] = Map.empty,
       boundTypes: Map[String, DataType] = Map.empty,
-      bounds: Seq[FileBounds] = Nil): DataFrame = {
+      bounds: Seq[FileBounds] = Nil,
+      constantSchema: StructType = StructType(Nil),
+      constants: Seq[Seq[Any]] = Nil): DataFrame = {
     require(bounds.isEmpty || bounds.size == files.size, "one FileBounds per manifest file")
+    require(constants.size == (if (constantSchema.isEmpty) 0 else files.size), "one constant row per manifest file")
     val session = spark.asInstanceOf[ClassicSession]
-    val byPath = new java.util.LinkedHashMap[Path, (FileStatus, FileBounds)]()
-    files.zipAll(bounds, null, Unbounded).foreach(e => byPath.put(e._1.getPath, e))
-    val deduped = {
-      import scala.jdk.CollectionConverters._
-      byPath.values.asScala.toSeq
+    lazy val conf = session.sessionState.newHadoopConf() // only an unrecorded length needs it
+    val byPath  = new java.util.LinkedHashMap[Path, (FileStatus, FileBounds, InternalRow)]()
+    files.zipWithIndex.foreach { case (f, i) =>
+      byPath.put(f.getPath, (if (f.getLen > 0L) f else f.getPath.getFileSystem(conf).getFileStatus(f.getPath),
+        bounds.lift(i).getOrElse(Unbounded),
+        constants.lift(i).fold(InternalRow.empty)(c => InternalRow.fromSeq(c.map(CatalystTypeConverters.convertToCatalyst)))))
     }
-    if (deduped.exists(_._1.getLen <= 0L)) // an unrecorded length is listed, never guessed
-      return spark.read.schema(dataSchema).options(options).parquet(deduped.map(_._1.getPath.toString): _*)
     val relation = HadoopFsRelation(
-      location = new ManifestFileIndex(deduped, boundTypes),
-      partitionSchema = StructType(Nil),
+      location = new ManifestFileIndex({
+        import scala.jdk.CollectionConverters._
+        byPath.values.asScala.toSeq
+      }, boundTypes, constantSchema),
+      partitionSchema = constantSchema,
       dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,

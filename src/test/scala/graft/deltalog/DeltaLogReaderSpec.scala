@@ -321,8 +321,8 @@ class DeltaLogReaderSpec extends SparkSuite {
         .withColumn(graft.types.KustoTypes.BlobPathColumn,
           org.apache.spark.sql.functions.lit(s"blob-$i"))
         .withColumn(graft.types.KustoTypes.IngestTsColumn,
-          org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L))))
-      t.publishStaged(s"b$i", statsColumns = Seq("id"))
+          org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L))), statsColumns = Seq("id"))
+      t.publishStaged(s"b$i", Seq("g0"))
     }
     t.deleteByLineage(Seq(("blob-2", None)), statsColumns = Seq("id"))
     assert(assertMatchesOracle(sinkDir, "sink") == 5)

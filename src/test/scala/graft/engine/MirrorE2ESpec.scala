@@ -427,7 +427,7 @@ class MirrorE2ESpec extends SparkSuite {
       spark.range(0, 4).toDF("id")
         .withColumn("year", lit(1994))
         .withColumn(KustoTypes.BlobPathColumn, lit(g94.head.blobPath.get))
-        .withColumn(KustoTypes.IngestTsColumn, lit(ts)))
+        .withColumn(KustoTypes.IngestTsColumn, lit(ts)), Map("year" -> "1994"))
     store.append(batch.metadata.map(_.withState(TxState.Done, Instant.now())).toSeq ++
       g94.map(_.withState(TxState.Staged, Instant.now())) ++
       g95.map(_.withState(TxState.Analyzed, Instant.now())) :+ staging)
@@ -506,10 +506,75 @@ class MirrorE2ESpec extends SparkSuite {
       graft.sink.MirrorTable.truncateBounds("a" * 100, "b" * 100, cap = 8)
     assert(mnT == "a" * 8 && mnT <= "a" * 100)
     assert(mxT == "b" * 7 + "c" && mxT > "b" * 100)
-    // non-ASCII bounds are dropped (UTF8_BINARY vs UTF-16 orders disagree
-    // beyond ASCII — conservative include instead of unsound pruning)
-    assert(graft.sink.MirrorTable.truncateBounds("café", "z", cap = 8).isEmpty)
-    assert(graft.sink.MirrorTable.truncateBounds("a", "emoji 😀", cap = 8).isEmpty)
+    // non-ASCII bounds truncate on code points, the UTF8_BINARY order the
+    // scan compares in: short ones are kept whole, and a max cut inside a
+    // supplementary character keeps it and increments it
+    assert(graft.sink.MirrorTable.truncateBounds("café", "z", cap = 8) == Some(("café", "z")))
+    assert(graft.sink.MirrorTable.truncateBounds("a", "emoji 😀", cap = 8) == Some(("a", "emoji 😀")))
+    val Some((mnU, mxU)) = graft.sink.MirrorTable.truncateBounds("ééééé", "ab😀cd", cap = 3)
+    assert(mnU == "ééé" && mxU == "ab😁")
+    assert(org.apache.spark.unsafe.types.UTF8String.fromString(mxU)
+      .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString("ab😀cd")) > 0)
+    // the increment steps over the surrogate range; U+10FFFF has no successor
+    assert(graft.sink.MirrorTable.truncateBounds("a", "x\uD7FFyz", cap = 2) == Some(("a", "x\uE000")))
+    assert(graft.sink.MirrorTable.truncateBounds("a", "x\uDBFF\uDFFFy", cap = 2).isEmpty)
+  }
+
+  test("OPTIMIZE records stats on a partition's lone small file, and null for unusable bounds") {
+    val (src, cfg) = setup("opt-lone")
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", DoubleType),
+      StructField("year", IntegerType)))
+    src.init(schema, Seq("year"))
+    def rows(from: Long, until: Long) =
+      spark.range(from, until).toDF("id").withColumn("v", org.apache.spark.sql.functions.lit(Double.NaN))
+    src.addCommit(rows(100, 300), Map("year" -> "1994"))
+    src.addCommit(rows(300, 500), Map("year" -> "1994"))
+    src.addCommit(rows(500, 1000), Map("year" -> "2024"))
+    val orch = new MirrorOrchestrator(spark, cfg)
+    orch.runOnce() // published without stats
+
+    def optimize() = orch.table.optimize(
+      targetFileBytes = 512L * 1024 * 1024, clusterBy = Seq("id"), statsColumns = Seq("id", "v"))
+    assert(optimize() > 0)
+    val live = orch.table.liveAdds()
+    assert(live.size == 2)
+    assert(live.forall(a => orch.table.statsOf(a, "id").isDefined))
+    // a NaN-only column has no usable bound: recorded as null, so the file
+    // is not rewritten by every later OPTIMIZE
+    assert(live.forall(_.tags(graft.sink.MirrorTable.StatsTag).contains("\"v\":null")))
+    assert(optimize() == -1L)
+    val ranged = graft.kql.KqlPipeline.run(Map("T" -> orch.table.snapshot()), "T | where id between (0 .. 50)")
+    assert(ranged.collect().isEmpty)
+    assert(GraftManifestScan.filesRead(ranged) == 0L)
+    assert(ids(orch) == (100L until 1000L))
+  }
+
+  test("escaped paths: a space and a % in the source root and a partition value keep lineage exact") {
+    val dir = tmpDir("src-escaped") + "/source 100%"
+    val src = new TestDelta(spark, dir, "escaped")
+    val cfg = MirrorConfig(
+      deltaTableUrl = dir,
+      mirrorDir = tmpDir("mirror-escaped"),
+      mirrorTableName = "escaped",
+      checkpointDir = tmpDir("state-escaped"),
+      statsColumns = Seq("id"))
+    src.init(StructType(Seq(StructField("id", LongType), StructField("part", StringType))), Seq("part"))
+    val odd   = src.addCommit(spark.range(1, 4).toDF("id"), Map("part" -> "a b%20c"))
+    val plain = src.addCommit(spark.range(4, 6).toDF("id"), Map("part" -> "plain"))
+    val orch  = new MirrorOrchestrator(spark, cfg)
+    orch.runOnce()
+
+    // every row carries its add's recorded path, byte for byte
+    val byBlob = orch.table.snapshot().select(KustoTypes.BlobPathColumn, "id").collect()
+      .groupBy(r => Option(r.getString(0))).map { case (b, rs) => b -> rs.map(_.getLong(1)).sorted.toSeq }
+    assert(byBlob == Map(Some(odd) -> Seq(1L, 2L, 3L), Some(plain) -> Seq(4L, 5L)))
+    MirrorInvariants.check(spark, dir, cfg)
+
+    // a source remove of the escaped file deletes exactly its rows
+    src.removeCommit(odd, Some(Map("part" -> "a b%20c")))
+    orch.runOnce()
+    assert(ids(orch) == Seq(4L, 5L))
+    MirrorInvariants.check(spark, dir, cfg)
   }
 
   test("time travel: snapshotAt reproduces each commit's live set") {

@@ -140,4 +140,29 @@ class PollStateSpec extends SparkSuite {
     assert(ids(orch) == (1L until 6L))
     assertHeldIsStore(orch, cfg, "after the remove poll")
   }
+
+  test("a steady two-group poll runs one Spark job per staged group, and one per rewritten group") {
+    val (src, cfgBase) = setup("jobs")
+    val cfg = cfgBase.copy(compactGarbageRatio = 1e9)
+    src.init(schema, Seq("year"))
+    val f0   = src.addCommit(spark.range(0, 4).toDF("id"), Map("year" -> "2024"))
+    val orch = new MirrorOrchestrator(spark, cfg)
+    orch.runOnce()
+
+    src.addCommitMulti(Seq(
+      spark.range(4, 6).toDF("id") -> Map("year" -> "2024"),
+      spark.range(6, 8).toDF("id") -> Map("year" -> "2025")))
+    assert(jobsDuring(orch.runOnce())._2 == 2, "the two staging writes")
+    assert(ids(orch) == (0L until 8L))
+
+    // removing a live file rewrites its one file group: one more write job,
+    // and no job collects lineage
+    src.addCommitMulti(Seq(
+      spark.range(8, 10).toDF("id") -> Map("year" -> "2024"),
+      spark.range(10, 12).toDF("id") -> Map("year" -> "2025")))
+    src.removeCommit(f0, Some(Map("year" -> "2024")))
+    assert(jobsDuring(orch.runOnce())._2 == 3, "two staging writes and one delete rewrite")
+    assert(ids(orch) == (4L until 12L))
+    assertHeldIsStore(orch, cfg, "after the remove poll")
+  }
 }

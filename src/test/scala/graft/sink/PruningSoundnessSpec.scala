@@ -69,9 +69,9 @@ class PruningSoundnessSpec extends SparkSuite {
         val p = Option(pv).flatMap(_.toIntOption).map(Int.box).orNull
         Row(nextId, l, d, s, p, s"blob-$i", ts)
       }
-      table.stage(s"stage-$i", "g", spark.createDataFrame(rows.asJava, schema).coalesce(1))
-      table.publishStaged(s"stage-$i", Map("g" -> Map("p" -> pv)),
-        if (i % 3 == 2) Nil else StatsCols)
+      table.stage(s"stage-$i", "g", spark.createDataFrame(rows.asJava, schema).coalesce(1),
+        Map("p" -> pv), if (i % 3 == 2) Nil else StatsCols)
+      table.publishStaged(s"stage-$i", Seq("g"))
     }
     val unpruned = GraftManifestScan.parquet(spark, schema, table.liveAdds().map(a =>
       GraftManifestScan.status(new Path(dir, a.path), a.size)))
@@ -155,6 +155,21 @@ class PruningSoundnessSpec extends SparkSuite {
     Map.empty[String, String],
     Map("spark.sql.adaptive.enabled" -> "false"),
     Map("spark.sql.parquet.filterPushdown" -> "false"))
+
+  test("a file holding only non-ASCII strings is skipped by a string filter that excludes it") {
+    val table = new MirrorTable(spark, tmpDir("prune-utf8"), "prune_utf8")
+    table.ensureSchema(StructType(Seq(StructField("id", LongType), StructField("s", StringType))), Nil)
+    val schema = table.currentMeta().get._1
+    val ts     = new java.sql.Timestamp(0L)
+    Seq(Seq("é" * 70, "ö😀"), Seq("apple", "mango")).zipWithIndex.foreach { case (vs, i) =>
+      val rows = vs.zipWithIndex.map { case (v, j) => Row((10 * i + j).toLong, v, s"blob-$i", ts) }
+      table.stage(s"stage-$i", "g", spark.createDataFrame(rows.asJava, schema).coalesce(1), Map.empty, Seq("s"))
+      table.publishStaged(s"stage-$i", Seq("g"))
+    }
+    assert(read(table.snapshot().where(col("s") <= "zebra")) == ((Seq(10L, 11L), 1L)))
+    assert(read(table.snapshot().where(col("s") === "ö😀")) == ((Seq(1L), 1L)))
+    assert(read(table.snapshot().where(col("s") > "ö😀")) == ((Nil, 0L)))
+  }
 
   Seeds.foreach { seed =>
     test(s"pruned mirror reads return the unpruned rows (seed $seed)") {

@@ -28,7 +28,7 @@ class SinkCheckpointSpec extends SparkSuite {
         .withColumn(KustoTypes.BlobPathColumn, lit(s"blob-$i"))
         .withColumn(KustoTypes.IngestTsColumn, lit(ts))
         .repartition(1))
-    assert(t.publishStaged(s"b$i") == i.toLong)
+    assert(t.publishStaged(s"b$i", Seq("g0")) == i.toLong)
   }
 
   test("tag rebuild opens only the latest checkpoint + trailing commits; delete stays exact") {

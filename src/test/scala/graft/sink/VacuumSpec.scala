@@ -29,7 +29,7 @@ class VacuumSpec extends SparkSuite {
     val dir = tmpDir("vacuum")
     val t   = new MirrorTable(spark, dir, "t")
     t.ensureSchema(schema, Nil)
-    (1 to 3).foreach { i => t.stage(s"b$i", "g0", stageDf(i)); t.publishStaged(s"b$i") }
+    (1 to 3).foreach { i => t.stage(s"b$i", "g0", stageDf(i)); t.publishStaged(s"b$i", Seq("g0")) }
 
     // a crash orphan: staged but never published, old enough to be past any
     // retention window
@@ -77,7 +77,7 @@ class VacuumSpec extends SparkSuite {
     val dir = tmpDir("vacuum-nots")
     val t   = new MirrorTable(spark, dir, "t")
     t.ensureSchema(schema, Nil)
-    t.stage("b1", "g0", stageDf(1)); t.publishStaged("b1")
+    t.stage("b1", "g0", stageDf(1)); t.publishStaged("b1", Seq("g0"))
 
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)

@@ -20,7 +20,7 @@ class MirrorChangeStreamSpec extends SparkSuite {
       .withColumn(KustoTypes.BlobPathColumn, lit(s"blob-$name"))
       .withColumn(KustoTypes.IngestTsColumn, lit(new java.sql.Timestamp(0L)))
       .repartition(1))
-    m.publishStaged(name)
+    m.publishStaged(name, Seq("g0"))
   }
 
   test("round-trip: stream in via StreamMirror, stream out via MirrorChangeStream — exactly-once") {

@@ -88,7 +88,7 @@ class StreamMirrorSpec extends SparkSuite {
       .withColumn(KustoTypes.BlobPathColumn, org.apache.spark.sql.functions.lit("b0"))
       .withColumn(KustoTypes.IngestTsColumn,
         org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L))))
-    val v1 = mirror.publishStaged("s0")
+    val v1 = mirror.publishStaged("s0", Seq("g-default"))
     mirror.deleteByLineage(Seq(("b0", None))) // tombstones the s0 file
     Thread.sleep(20)
     assert(mirror.vacuum(0L) >= 1)
@@ -104,7 +104,7 @@ class StreamMirrorSpec extends SparkSuite {
       .withColumn(KustoTypes.BlobPathColumn, org.apache.spark.sql.functions.lit("b0"))
       .withColumn(KustoTypes.IngestTsColumn,
         org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L))))
-    mirror.publishStaged("s0")
+    mirror.publishStaged("s0", Seq("g-default"))
     val live = mirror.liveAdds() match {
       case Seq(only) => only
       case many      => fail(s"test needs exactly one published file, got ${many.size}")
