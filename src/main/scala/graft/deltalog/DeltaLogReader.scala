@@ -89,25 +89,24 @@ class DeltaLogReader(
     */
   def readCommits(commits: Seq[(Long, Path)]): Seq[TxLog] = {
     commitFilesRead.addAndGet(commits.size)
-    // commits whose actions are all non-engine (commitInfo/txn only) fold to
-    // zero items and are skipped; the tx range still advances past them when
-    // a later non-empty commit lands in the same batch.
-    commits.flatMap { case (tx, p) =>
-      val items = parseCommit(tx, p)
-      if (items.isEmpty) None else Some(TxLog(items))
-    }
+    // commits with no engine item (commitInfo, a lone txn) are skipped; the
+    // tx range still advances past them when a later non-empty commit lands
+    // in the same batch.
+    commits.flatMap { case (tx, p) => parseCommit(tx, p) }
   }
 
-  /** One commit file → its engine items. Both torn-write shapes fail
-    * LOUDLY: a line that is not a JSON object (or holds a wrong-typed field
-    * the engine consumes) would otherwise map to no actions and silently
-    * present the table as empty/behind — the same failure class as a log
-    * gap; and a file with no records at all (zero bytes, or whitespace
-    * only) is never a valid commit, which always holds ≥1 action line.
+  /** One commit file → its engine items and `txn` versions. Both torn-write
+    * shapes fail LOUDLY: a line that is not a JSON object (or holds a
+    * wrong-typed field the engine consumes) would otherwise map to no
+    * actions and silently present the table as empty/behind — the same
+    * failure class as a log gap; and a file with no records at all (zero
+    * bytes, or whitespace only) is never a valid commit, which always holds
+    * ≥1 action line.
     */
-  private def parseCommit(tx: Long, p: Path): Seq[TransactionItem] = {
+  private def parseCommit(tx: Long, p: Path): Option[TxLog] = {
     val now     = Instant.now()
     val out     = Seq.newBuilder[TransactionItem]
+    val txns    = Map.newBuilder[String, Long]
     var records = 0
     val in = new BufferedReader(new InputStreamReader(fs.open(p), StandardCharsets.UTF_8))
     try {
@@ -122,7 +121,8 @@ class DeltaLogReader(
             catch { case e: JsonProcessingException => throw corrupt(e.getOriginalMessage) }
           if (!node.isObject) throw corrupt("not a JSON object")
           records += 1
-          try out ++= toItems(JsonFields(node), tx, tx, now)
+          val action = JsonFields(node)
+          try { out ++= toItems(action, tx, tx, now); txns ++= txnOf(action) }
           catch { case e: WrongType => throw corrupt(e.getMessage) }
         }
         line = in.readLine()
@@ -132,7 +132,8 @@ class DeltaLogReader(
       throw new IllegalStateException(
         s"Commit file $p of table $mirrorTableName (tx $tx) contains no JSON records " +
           "(torn write?) — refusing to read")
-    out.result()
+    val items = out.result()
+    if (items.isEmpty) None else Some(TxLog(items).copy(txns = txns.result()))
   }
 
   /** S5/O1: read a `<v>.checkpoint.parquet` (possibly multi-part) into one
@@ -177,9 +178,10 @@ class DeltaLogReader(
     // the checkpoint-bootstrap path too
     val rows = spark.read.schema(ActionSchema)
       .parquet(names.map(_.toUri.toString): _*)
-      .select("metaData", "add", "remove", "protocol")
+      .select("metaData", "add", "remove", "txn", "protocol")
       .collect()
     TxLog(rows.toSeq.flatMap(rowItems(_, startTxId, version)))
+      .copy(txns = rows.flatMap(r => txnOf(RowFields(r))).toMap)
   }
 
   /** One action row typed by [[DeltaLogReader.ActionSchema]] → its items. */
@@ -364,6 +366,10 @@ class DeltaLogReader(
     }
     out.result()
   }
+
+  /** A `txn` action → (appId, version); the protocol requires both. */
+  private def txnOf(action: Fields): Option[(String, Long)] = action.struct("txn").map(t =>
+    t.str("appId").zip(t.long("version")).getOrElse(throw new WrongType("txn lacks appId or version")))
 
   private def parseNumRecords(stats: String): Option[Long] =
     try {

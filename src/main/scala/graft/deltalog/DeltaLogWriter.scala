@@ -118,6 +118,18 @@ class DeltaLogWriter(spark: SparkSession, tablePath: String) {
     n.toString
   }
 
+  /** Delta's `txn` (PROTOCOL.md, "Transaction Identifiers"): application
+    * `appId` has committed `version`, atomically with the commit's adds.
+    */
+  def txnAction(appId: String, version: Long): String = {
+    val n = M.createObjectNode()
+    val t = n.putObject("txn")
+    t.put("appId", appId)
+    t.put("version", version)
+    t.put("lastUpdated", System.currentTimeMillis())
+    n.toString
+  }
+
   /** Materialize `folded` — the table state as of commit `version`, which
     * the caller already holds — as that version's
     * `<v>.checkpoint.parquet` + `_last_checkpoint` pointer (what Delta
@@ -159,7 +171,8 @@ class DeltaLogWriter(spark: SparkSession, tablePath: String) {
             java.lang.Boolean.TRUE, null, r.partitionValues.orNull,
             r.size.map(java.lang.Long.valueOf).orNull, null),
           null, null)
-      }
+      } ++
+      folded.txns.map { case (app, v) => Row(null, null, null, Row(app, v, null), null) }
 
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), DeltaLogReader.ActionSchema)

@@ -92,6 +92,9 @@ class MirrorOrchestrator(
   private val reader =
     new DeltaLogReader(spark, config.deltaTableUrl, config.mirrorTableName, config.readAhead)
   private val mirror = new MirrorTable(spark, config.mirrorDir, config.mirrorTableName)
+  // the application id of this orchestrator's `txn` in the mirror's log,
+  // versioned by each published batch's endTxId (one orchestrator per mirror)
+  private val txnAppId = s"graft-orchestrator-${config.mirrorTableName}"
 
   private def now(): Instant = Instant.now()
 
@@ -395,8 +398,9 @@ class MirrorOrchestrator(
     * Stage 6 — close (S13): adds Done, removes Done/Skipped and staging
     * Done land in ONE append (staged files ARE the published files, so
     * there is nothing to drop). A crash before it leaves the adds Staged and
-    * resume re-runs load: publish skips files already live, and no live file
-    * still carries the doomed (blob, ingest ts) rows.
+    * resume re-runs load: the mirror's `txn` for this orchestrator already
+    * holds the batch's `endTxId`, so publish commits nothing, and no live
+    * file still carries the doomed (blob, ingest ts) rows.
     */
   private def load(startTxId: Long): Unit =
       graft.util.PhaseTimer.time("orch.load") {
@@ -417,7 +421,8 @@ class MirrorOrchestrator(
         write(toLoad.filter(a => lost(group(a))).map(_.withState(TxState.Analyzed, now())))
         stageAdds(startTxId)
       }
-      graft.util.PhaseTimer.time("mirror.publish")(mirror.publishStaged(stagingName, groups))
+      graft.util.PhaseTimer.time("mirror.publish")(
+        mirror.publishStaged(stagingName, groups, txnAppId, batch.endTxId))
     }
 
     // resolve + apply removes

@@ -55,28 +55,36 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
 
   /** `CREATE TABLE IF NOT EXISTS` + additive schema merge (S14,
     * DeltaTableOrchestration.cs:301-335): first call writes the metaData
-    * commit; a later additive schema change re-commits it; a
-    * partition-column change is refused (TransactionLog.cs:153-157).
+    * commit; a later additive schema change re-commits it under the same
+    * table id; a partition-column change is refused
+    * (TransactionLog.cs:153-157).
     */
   def ensureSchema(sourceSchema: StructType, partitionColumns: Seq[String]): Unit = {
     val full = KustoTypes.withTrackingColumns(sourceSchema)
-    currentMeta() match {
+    snapshotLog().flatMap(_.metadata) match {
       case None =>
         writer.commit(Seq(writer.metaDataAction(
           java.util.UUID.randomUUID().toString, name, full, partitionColumns)))
-      case Some((existing, pcols)) =>
+      case Some(m) =>
+        val (existing, pcols) = metaOf(m)
         require(pcols == partitionColumns,
           s"Repartitioning unsupported: $pcols -> $partitionColumns")
-        if (existing != full) {
-          val merged = mergeSchemas(existing, full)
-          if (merged != existing)
-            writer.commit(Seq(writer.metaDataAction(
-              java.util.UUID.randomUUID().toString, name, merged, partitionColumns)))
-        }
+        val merged = mergeSchemas(existing, full)
+        if (merged != existing)
+          writer.commit(Seq(writer.metaDataAction(tableId, name, merged, partitionColumns)))
     }
   }
 
   def currentMeta(): Option[(StructType, Seq[String])] = snapshotLog().flatMap(_.metadata).map(metaOf)
+
+  /** The table's Delta `metaData.id`: minted once, kept across schema changes. */
+  def tableId: String = snapshotLog().flatMap(_.metadata).flatMap(_.internalState.deltaTableId).getOrElse(
+    throw new IllegalStateException(s"Mirror table $name has no table id"))
+
+  /** The latest `txn` version of `appId` (a map lookup on the snapshot
+    * memo): the exactly-once watermark of each writer into this mirror.
+    */
+  def txnVersion(appId: String): Option[Long] = snapshotLog().flatMap(_.txns.get(appId))
 
   private def metaOf(m: TransactionItem): (StructType, Seq[String]) =
     (KustoTypes.structFrom(m.schema.getOrElse(Seq.empty)), m.partitionColumns.getOrElse(Seq.empty))
@@ -122,13 +130,15 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
   }
 
   /** Publish the staged groups `groupIds` of `stagingName` in ONE commit of
-    * the add actions their staging recorded — no listing, no Spark job; the
-    * commit rename flips visibility. Files already live (a retry after a
-    * crash between commit and state-persist) are skipped. A named group
-    * whose staging never finished fails loudly.
-    * Returns the commit version, or -1 if nothing new to publish.
+    * the add actions their staging recorded plus `txn{appId, version}` —
+    * no listing, no Spark job; the commit rename flips visibility. When
+    * `appId` already holds `version` or later (a retry after a crash
+    * between this commit and the caller's own bookkeeping), nothing is
+    * committed. A named group whose staging never finished fails loudly.
+    * Returns the commit version, or -1 if nothing was committed.
     */
-  def publishStaged(stagingName: String, groupIds: Seq[String]): Long = {
+  def publishStaged(stagingName: String, groupIds: Seq[String], appId: String, version: Long): Long = {
+    if (txnVersion(appId).exists(_ >= version)) return -1L
     val staged = groupIds.distinct.flatMap { g =>
       val f = addsFile(stagingName, g)
       if (!fs.exists(f))
@@ -137,11 +147,10 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
       try new String(in.readAllBytes(), StandardCharsets.UTF_8).split('\n').filter(_.nonEmpty).toSeq
       finally in.close()
     }
-    val live  = graft.util.PhaseTimer.time("publish.live")(liveAdds().map(_.path).toSet)
-    val fresh = staged.filterNot(a => live.contains(M.readTree(a).get("add").get("path").asText))
-    if (fresh.isEmpty) return -1L
+    if (staged.isEmpty) return -1L
     faultHook("publish.pre-commit")
-    val v = graft.util.PhaseTimer.time("publish.commit")(writer.commit(fresh))
+    val v = graft.util.PhaseTimer.time("publish.commit")(
+      writer.commit(staged :+ writer.txnAction(appId, version)))
     faultHook("publish.committed")
     maybeCheckpoint(v)
     v

@@ -20,9 +20,8 @@ import graft.sink.MirrorTable
   *  - the offset is persisted AFTER the batch callback returns, so a crash
   *    between the two replays the batch: at-least-once for arbitrary
   *    callbacks, exactly-once when the callback is idempotent per version
-  *    range — which [[replicateOnce]] is, by staging under version-scoped
-  *    names into the target mirror (the same collision-on-purpose protocol
-  *    StreamMirror uses);
+  *    range — which [[replicateOnce]] is, through the target's `txn`
+  *    watermark (the same protocol StreamMirror uses);
   *  - REWRITTEN history (delete/OPTIMIZE removes inside the range) fails the
   *    stream by default: an append-only feed cannot represent row removal,
   *    and silently forwarding the re-added rows would duplicate them
@@ -85,42 +84,28 @@ class MirrorChangeStream(
   }
 
   /** Exactly-once mirror→mirror replication of one micro-batch. The target's
-    * OWN commit log is the replication watermark: staging names carry the
-    * source version they end at (`cdc-<hash>-<to>`), so the highest published
-    * one says how far replication truly got — a crash between target-publish
-    * and offset-persist replays the range, the already-replicated prefix is
-    * filtered out by `MLK_CommitVersion`, and an identical replay collides
-    * with the published staging and skips. No duplicates, no new mechanism
-    * (StreamMirror's protocol plus the CDC version column). Source lineage
-    * columns ride along, so lineage-pinned deletes keep working on the
-    * replica.
+    * `txn{appId = the source's metaData.id, version = to}` says how far
+    * replication got, whatever rewrote the target's files since: a replayed
+    * range (crash before the offset write, or a new consumer) forwards only
+    * rows past it, by `MLK_CommitVersion`. Keyed by table id, not name or
+    * consumer checkpoint, so two consumers of one source are one feed and
+    * two sources sharing a name are two. Source lineage columns ride along.
     */
   def replicateOnce(target: MirrorTable): Option[(Long, Long)] =
     drainOnce { (df, from, to) =>
-      // how far this source has ALREADY been replicated into the target —
-      // authoritative even when the offset write was lost
-      val pre    = s"data/cdc-$sourceHash-"
-      val prevTo = target.liveAdds().iterator.map(_.path).filter(_.startsWith(pre))
-        .map(_.drop(pre.length).takeWhile(_.isDigit)).filter(_.nonEmpty)
-        .map(_.toLong).maxOption.getOrElse(-1L)
+      val sourceId = mirror.tableId
+      val prevTo   = target.txnVersion(sourceId).getOrElse(-1L)
       if (prevTo < to) {
         val vCol  = graft.types.KustoTypes.CommitVersionColumn
         val fresh =
           if (prevTo > from) df.filter(org.apache.spark.sql.functions.col(vCol) > prevTo)
           else df
-        val stagingName = f"cdc-$sourceHash-$to%012d"
+        val stagingName = f"cdc-$sourceId-$to%012d"
         target.stage(stagingName, "g-default", fresh.drop(vCol))
-        target.publishStaged(stagingName, Seq("g-default"))
+        target.publishStaged(stagingName, Seq("g-default"), sourceId, to)
       }
       ()
     }
-
-  // identifies the SOURCE feed, deliberately NOT the consumer checkpoint:
-  // the replication watermark must survive checkpoint loss/replacement, and
-  // two consumers replicating the same source into one target are the same
-  // logical feed (deduplicating them is correct)
-  private val sourceHash = java.util.UUID.nameUUIDFromBytes(
-    mirror.name.getBytes(StandardCharsets.UTF_8)).toString.take(8)
 
   /** Continuous mode: poll every `pollMs` until [[Handle.stop]]. Failures
     * (rewritten history, vacuumed range, callback errors) stop the loop and

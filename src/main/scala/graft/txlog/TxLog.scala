@@ -1,7 +1,9 @@
 package graft.txlog
 
 /** An in-memory batch of transaction items spanning one tx-id range:
-  * optional schema metadata, optional staging-table marker, adds, removes.
+  * optional schema metadata, optional staging-table marker, adds, removes,
+  * and the latest Delta `txn` version per application id (`TxnData`,
+  * TransactionLogEntry.cs:101-108).
   *
   * Reference: Storage/TransactionLog.cs:9-70. The algebra below
   * (`coalesce`, `delta`) is the reference's core incremental-view-maintenance
@@ -13,7 +15,8 @@ final case class TxLog(
     metadata: Option[TransactionItem],
     stagingTable: Option[TransactionItem],
     adds: Seq[TransactionItem],
-    removes: Seq[TransactionItem]
+    removes: Seq[TransactionItem],
+    txns: Map[String, Long] = Map.empty
 ) {
   require(
     metadata.nonEmpty || stagingTable.nonEmpty || adds.nonEmpty || removes.nonEmpty,
@@ -46,7 +49,7 @@ final case class TxLog(
     * silently dropping `second`'s removes of blobs added before the batch.
     * We keep all non-annihilated removes — the semantically correct form
     * (a delete commit arriving in the same poll as unrelated appends must
-    * still delete).
+    * still delete). A later `txn` of an application id replaces the earlier.
     */
   def coalesce(second: TxLog): TxLog = {
     val mergedMetadata = (metadata, second.metadata) match {
@@ -73,7 +76,8 @@ final case class TxLog(
       mergedMetadata.map(_.withTxRange(newStart, newEnd)),
       stagingTables.headOption.map(_.withTxRange(newStart, newEnd)),
       remainingAdds.map(_.withTxRange(newStart, newEnd)),
-      remainingRemoves.map(_.withTxRange(newStart, newEnd))
+      remainingRemoves.map(_.withTxRange(newStart, newEnd)),
+      txns ++ second.txns
     )
   }
 

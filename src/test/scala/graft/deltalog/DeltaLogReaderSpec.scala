@@ -257,6 +257,36 @@ class DeltaLogReaderSpec extends SparkSuite {
     assert(batch.startTxId == 0L && batch.endTxId == 2L)
   }
 
+  test("a source whose commits carry txn yields the same batches as without it") {
+    val plain = tmpDir("txn-plain")
+    val fx    = new TestDelta(spark, plain, "txn")
+    fx.init(idSchema)
+    fx.addCommit(spark.range(3).toDF("id"))
+    fx.addCommit(spark.range(3, 5).toDF("id"))
+    fx.addCommit(spark.range(5, 9).toDF("id"))
+
+    // the same log, each commit carrying a streaming writer's txn line
+    val withTxn = tmpDir("txn-carried") + "/table"
+    val fs      = new Path(plain).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(plain), fs, new Path(withTxn), false, true,
+      spark.sparkContext.hadoopConfiguration)
+    new DeltaLogReader(spark, withTxn, "txn").listCommits().foreach { case (v, p) =>
+      val in   = fs.open(p)
+      val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val out  = fs.create(p, true)
+      try out.write((body + s"""{"txn":{"appId":"writer","version":$v,"lastUpdated":1}}\n""").getBytes("UTF-8"))
+      finally out.close()
+    }
+
+    def batches(dir: String): Seq[Seq[TransactionItem]] = {
+      val reader = new DeltaLogReader(spark, dir, "txn", readAhead = 2)
+      val first  = reader.nextBatch(None).get
+      Seq(first, reader.nextBatch(Some(first)).get).map(b => stable(b.allItems))
+    }
+    assert(batches(withTxn) == batches(plain))
+    assert(new DeltaLogReader(spark, withTxn, "txn").fullSnapshot().get.txns == Map("writer" -> 3L))
+  }
+
   // ---- driver-side commit parse ------------------------------------------
   //
   // The oracle is the job-based reader the driver parse replaced:
@@ -322,7 +352,7 @@ class DeltaLogReaderSpec extends SparkSuite {
           org.apache.spark.sql.functions.lit(s"blob-$i"))
         .withColumn(graft.types.KustoTypes.IngestTsColumn,
           org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L))), statsColumns = Seq("id"))
-      t.publishStaged(s"b$i", Seq("g0"))
+      t.publishStaged(s"b$i", Seq("g0"), "test", i)
     }
     t.deleteByLineage(Seq(("blob-2", None)), statsColumns = Seq("id"))
     assert(assertMatchesOracle(sinkDir, "sink") == 5)
@@ -363,6 +393,11 @@ class DeltaLogReaderSpec extends SparkSuite {
     assert(corruptInOracle(badSize))
     val e1 = refusal(badSize)
     assert(e1.contains("Corrupt Delta commit JSON") && e1.contains("size"), e1)
+    // a string where txn.version holds a long
+    val badTxn = """{"txn":{"appId":"app","version":"3","lastUpdated":1}}"""
+    assert(corruptInOracle(badTxn))
+    val e2 = refusal(badTxn)
+    assert(e2.contains("Corrupt Delta commit JSON") && e2.contains("version"), e2)
     val badStruct = """{"add":5}"""
     assert(corruptInOracle(badStruct))
     assert(refusal(badStruct).contains("Corrupt Delta commit JSON"))

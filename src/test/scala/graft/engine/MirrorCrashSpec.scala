@@ -15,6 +15,9 @@ import graft.types.KustoTypes
   * groups and removes a live file. A fresh orchestrator over a fresh store
   * handle must finish the batch with the mirror equal to the source, no blob
   * ingested twice, and every live file's lineage tag equal to its rows.
+  * StreamMirror and replication, the other two writers the mirror's `txn`
+  * guards, crash after publish's commit and must resume without a
+  * duplicate row.
   */
 class MirrorCrashSpec extends SparkSuite {
 
@@ -40,9 +43,54 @@ class MirrorCrashSpec extends SparkSuite {
     try intercept[SimulatedCrash](t.stage("b1", "g0", df, Map("year" -> "2024")))
     finally MirrorTable.faultHook = _ => ()
     assert(!t.isStaged("b1", "g0"))
-    assert(intercept[IllegalStateException](t.publishStaged("b1", Seq("g0"))).getMessage
+    assert(intercept[IllegalStateException](t.publishStaged("b1", Seq("g0"), "test", 1)).getMessage
       .contains("no recorded adds"))
     assert(t.liveAdds().isEmpty)
+  }
+
+  /** Run `body` with a crash at the first `publish.committed`. */
+  private def crashAfterCommit(body: => Unit): Unit = {
+    MirrorTable.faultHook = p => if (p == "publish.committed") throw new SimulatedCrash
+    try body finally MirrorTable.faultHook = _ => ()
+  }
+
+  private def ids(m: MirrorTable): Seq[Long] =
+    m.snapshot().select("id").collect().map(_.getLong(0)).sorted.toSeq
+
+  private val idSchema = StructType(Seq(StructField("id", LongType)))
+
+  test("crash at publish.committed in StreamMirror: the replayed micro-batch is not republished") {
+    val srcDir = tmpDir("crash-stream-src")
+    val dir    = tmpDir("crash-stream-mirror")
+    val mirror = new MirrorTable(spark, dir, "crash_stream")
+    mirror.ensureSchema(idSchema, Nil)
+    val ckpt = tmpDir("crash-stream-ckpt")
+    def run(): Unit = graft.streaming.StreamMirror.start(
+      spark.readStream.schema(idSchema).parquet(srcDir), mirror, ckpt).awaitTermination()
+    spark.range(0, 5).toDF("id").coalesce(1).write.mode("append").parquet(srcDir)
+    run()
+    spark.range(5, 9).toDF("id").coalesce(1).write.mode("append").parquet(srcDir)
+    crashAfterCommit(intercept[org.apache.spark.sql.streaming.StreamingQueryException](run()))
+    run()
+    assert(ids(mirror) == (0L until 9L))
+    MirrorInvariants.checkFiles(spark, dir, mirror.name)
+  }
+
+  test("crash at publish.committed in replicateOnce: the replayed range is not republished") {
+    val source = new MirrorTable(spark, tmpDir("crash-repl-src"), "crash_repl_src")
+    val dstDir = tmpDir("crash-repl-dst")
+    val target = new MirrorTable(spark, dstDir, "crash_repl_dst")
+    Seq(source, target).foreach(_.ensureSchema(idSchema, Nil))
+    source.stage("b1", "g0", spark.range(0, 5).toDF("id")
+      .withColumn(KustoTypes.BlobPathColumn, lit("blob-1"))
+      .withColumn(KustoTypes.IngestTsColumn, lit(new java.sql.Timestamp(0L))))
+    source.publishStaged("b1", Seq("g0"), "test", 1)
+    val stream = new graft.streaming.MirrorChangeStream(spark, source, tmpDir("crash-repl-ckpt"))
+    crashAfterCommit(intercept[SimulatedCrash](stream.replicateOnce(target)))
+    assert(stream.appliedVersion() == -1L, "the crash came after the offset write")
+    assert(stream.replicateOnce(target).nonEmpty)
+    assert(ids(target) == (0L until 5L))
+    MirrorInvariants.checkFiles(spark, dstDir, target.name)
   }
 
   for ((point, times) <- Points; n <- 1 to times)

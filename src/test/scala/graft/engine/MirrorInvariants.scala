@@ -59,12 +59,15 @@ object MirrorInvariants {
     checkFiles(spark, cfg.mirrorDir, cfg.mirrorTableName)
   }
 
-  /** Each live mirror file's `numRecords` equals its row count, and its
-    * lineage tag equals the distinct non-null `MLK_BlobPath` of its rows.
+  /** Each live mirror file is listed once (a republish of published adds
+    * lists it twice), its `numRecords` equals its row count, and its lineage
+    * tag equals the distinct non-null `MLK_BlobPath` of its rows.
     */
   def checkFiles(spark: SparkSession, mirrorDir: String, name: String): Unit = {
     val log    = new DeltaLogReader(spark, mirrorDir, name).fullSnapshot().get
     val schema = KustoTypes.structFrom(log.metadata.get.schema.getOrElse(Nil))
+    val twice  = log.adds.flatMap(_.blobPath).groupBy(identity).collect { case (p, ps) if ps.size > 1 => p }
+    assert(twice.isEmpty, s"live files listed more than once: ${twice.mkString(", ")}")
     log.adds.foreach { a =>
       val rows = GraftManifestScan.parquet(spark, schema,
         Seq(GraftManifestScan.status(new Path(mirrorDir, a.blobPath.get), a.size.get)))

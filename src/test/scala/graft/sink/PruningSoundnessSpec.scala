@@ -71,7 +71,7 @@ class PruningSoundnessSpec extends SparkSuite {
       }
       table.stage(s"stage-$i", "g", spark.createDataFrame(rows.asJava, schema).coalesce(1),
         Map("p" -> pv), if (i % 3 == 2) Nil else StatsCols)
-      table.publishStaged(s"stage-$i", Seq("g"))
+      table.publishStaged(s"stage-$i", Seq("g"), "test", i)
     }
     val unpruned = GraftManifestScan.parquet(spark, schema, table.liveAdds().map(a =>
       GraftManifestScan.status(new Path(dir, a.path), a.size)))
@@ -164,7 +164,7 @@ class PruningSoundnessSpec extends SparkSuite {
     Seq(Seq("é" * 70, "ö😀"), Seq("apple", "mango")).zipWithIndex.foreach { case (vs, i) =>
       val rows = vs.zipWithIndex.map { case (v, j) => Row((10 * i + j).toLong, v, s"blob-$i", ts) }
       table.stage(s"stage-$i", "g", spark.createDataFrame(rows.asJava, schema).coalesce(1), Map.empty, Seq("s"))
-      table.publishStaged(s"stage-$i", Seq("g"))
+      table.publishStaged(s"stage-$i", Seq("g"), "test", i)
     }
     assert(read(table.snapshot().where(col("s") <= "zebra")) == ((Seq(10L, 11L), 1L)))
     assert(read(table.snapshot().where(col("s") === "ö😀")) == ((Seq(1L), 1L)))

@@ -21,6 +21,14 @@ class SinkCheckpointSpec extends SparkSuite {
 
   private def publishN(t: MirrorTable, n: Int): Unit = (1 to n).foreach(publishOne(t, _))
 
+  // publishes rotate over three txn application ids, so the txn map has
+  // several entries, each advanced at a different commit
+  private val AppIds = Seq("app-0", "app-1", "app-2")
+
+  /** The txn version each application last published by commit `i`. */
+  private def expectedTxns(i: Int): Seq[Option[Long]] =
+    AppIds.indices.map(k => (1 to i).filter(_ % 3 == k).lastOption.map(_.toLong))
+
   /** Publish batch `i` (5 rows of source blob `blob-i`) as commit `i`. */
   private def publishOne(t: MirrorTable, i: Int): Unit = {
     t.stage(s"b$i", "g0",
@@ -28,7 +36,7 @@ class SinkCheckpointSpec extends SparkSuite {
         .withColumn(KustoTypes.BlobPathColumn, lit(s"blob-$i"))
         .withColumn(KustoTypes.IngestTsColumn, lit(ts))
         .repartition(1))
-    assert(t.publishStaged(s"b$i", Seq("g0")) == i.toLong)
+    assert(t.publishStaged(s"b$i", Seq("g0"), AppIds(i % 3), i) == i.toLong)
   }
 
   test("tag rebuild opens only the latest checkpoint + trailing commits; delete stays exact") {
@@ -49,6 +57,8 @@ class SinkCheckpointSpec extends SparkSuite {
       s"expected 1 checkpoint load, got ${t2.logReader.checkpointsLoaded.get}")
     assert(t2.logReader.commitFilesRead.get == 5L,
       s"expected 5 trailing commit reads, got ${t2.logReader.commitFilesRead.get}")
+    // the txn watermarks survived the checkpoint round-trip too
+    assert(AppIds.map(t2.txnVersion) == expectedTxns(25))
 
     // delete by a lineage published BEFORE the checkpoint: exactness needs
     // the checkpoint-carried tags — without them every file is conservatively
@@ -109,6 +119,7 @@ class SinkCheckpointSpec extends SparkSuite {
       val fresh = new MirrorTable(spark, dir, "t")
       assert(t1.liveAdds() == fresh.liveAdds(), s"$step: live files differ")
       assert(t1.currentMeta() == fresh.currentMeta(), s"$step: metadata differs")
+      assert(AppIds.map(t1.txnVersion) == AppIds.map(fresh.txnVersion), s"$step: txn map differs")
       val v = t1.currentVersion()
       assert(t1.logReader.commitFilesRead.get == v + 1,
         s"$step: ${t1.logReader.commitFilesRead.get} commit reads for ${v + 1} commits")
@@ -119,6 +130,7 @@ class SinkCheckpointSpec extends SparkSuite {
     (1 to 25).foreach { i =>
       publishOne(t1, i)
       check(s"publish $i")
+      assert(AppIds.map(t1.txnVersion) == expectedTxns(i), s"publish $i: txn map")
     }
     val ckpts = new java.io.File(s"$dir/_delta_log").list().filter(_.endsWith(".checkpoint.parquet"))
     assert(ckpts.sorted.toSeq == Seq(10L, 20L).map(v => f"$v%020d.checkpoint.parquet"))
@@ -130,6 +142,24 @@ class SinkCheckpointSpec extends SparkSuite {
     assert(t1.currentVersion() == 28L)
     check("schema change")
     assert(t1.snapshot().count() == 24 * 5)
+    assert(AppIds.map(t1.txnVersion) == expectedTxns(25), "rewrites moved the txn map")
+  }
+
+  test("an additive schema change keeps the table id, also through a sink checkpoint") {
+    val dir = tmpDir("sink-id")
+    def idInLog(): Option[String] = new graft.deltalog.DeltaLogReader(spark, dir, "t").fullSnapshot()
+      .flatMap(_.metadata).flatMap(_.internalState.deltaTableId)
+    val t1 = new MirrorTable(spark, dir, "t")
+    t1.ensureSchema(schema, Nil) // commit 0
+    val id = idInLog()
+    assert(id.nonEmpty)
+    t1.ensureSchema(schema.add("extra", "string"), Nil) // commit 1
+    assert(t1.currentVersion() == 1L)
+    assert(idInLog() == id, "an additive schema change minted a new table id")
+    (2 to 12).foreach(publishOne(t1, _)) // checkpoint at v10
+    val fresh = new MirrorTable(spark, dir, "t")
+    assert(fresh.tableId == id.get)
+    assert(fresh.logReader.checkpointsLoaded.get == 1L)
   }
 
   test("a read right after a publish runs no Spark job to resolve the snapshot") {

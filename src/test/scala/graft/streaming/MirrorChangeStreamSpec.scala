@@ -20,7 +20,7 @@ class MirrorChangeStreamSpec extends SparkSuite {
       .withColumn(KustoTypes.BlobPathColumn, lit(s"blob-$name"))
       .withColumn(KustoTypes.IngestTsColumn, lit(new java.sql.Timestamp(0L)))
       .repartition(1))
-    m.publishStaged(name, Seq("g0"))
+    m.publishStaged(name, Seq("g0"), "test", until)
   }
 
   test("round-trip: stream in via StreamMirror, stream out via MirrorChangeStream — exactly-once") {
@@ -71,6 +71,40 @@ class MirrorChangeStreamSpec extends SparkSuite {
       .map(_.getString(0)).find(_.endsWith(".parquet")).get
     target.deleteByLineage(Seq((streamedBlob, None)))
     assert(target.snapshot().count() < 12)
+  }
+
+  private def ids(m: MirrorTable): Seq[Long] =
+    m.snapshot().select("id").collect().map(_.getLong(0)).sorted.toSeq
+
+  test("rewriting every replicated file (OPTIMIZE, then a delete) keeps the replication watermark") {
+    val source = new MirrorTable(spark, tmpDir("erode-src"), "src")
+    source.ensureSchema(schema, Nil)
+    val target = new MirrorTable(spark, tmpDir("erode-dst"), "dst")
+    target.ensureSchema(schema, Nil)
+    ingest(source, "a", 0, 5)
+    new MirrorChangeStream(spark, source, tmpDir("erode-ckpt1")).replicateOnce(target)
+    ingest(source, "b", 5, 9)
+    new MirrorChangeStream(spark, source, tmpDir("erode-ckpt1")).replicateOnce(target)
+    assert(target.optimize() > 0)
+    target.deleteByLineage(Seq(("blob-a", None)))
+    assert(target.liveAdds().forall(_.path.startsWith("data/delete-")), "a cdc file is still live")
+
+    // a fresh consumer (offset -1) forwards only what the target lacks
+    ingest(source, "c", 9, 12)
+    new MirrorChangeStream(spark, source, tmpDir("erode-ckpt2")).replicateOnce(target)
+    assert(ids(target) == (5L until 12L), "the fresh consumer re-replicated rewritten rows")
+  }
+
+  test("two sources with the same name replicate in full into one target") {
+    val a = new MirrorTable(spark, tmpDir("same-name-a"), "events")
+    val b = new MirrorTable(spark, tmpDir("same-name-b"), "events")
+    val target = new MirrorTable(spark, tmpDir("same-name-dst"), "dst")
+    Seq(a, b, target).foreach(_.ensureSchema(schema, Nil))
+    ingest(a, "a", 0, 5)
+    ingest(b, "b", 100, 103)
+    new MirrorChangeStream(spark, a, tmpDir("same-name-ckpt-a")).replicateOnce(target)
+    new MirrorChangeStream(spark, b, tmpDir("same-name-ckpt-b")).replicateOnce(target)
+    assert(ids(target) == (0L until 5L) ++ (100L until 103L))
   }
 
   test("continuous polling handle: sees new commits, stop() is clean, failures rethrow") {

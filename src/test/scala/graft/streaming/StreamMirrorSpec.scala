@@ -75,6 +75,38 @@ class StreamMirrorSpec extends SparkSuite {
     assert(mirror.snapshot().count() == 9)
   }
 
+  test("OPTIMIZE rewriting every stream file erases neither the replay skip nor the loss refusal") {
+    val srcDir = tmpDir("erode-src")
+    val mirror = new MirrorTable(spark, tmpDir("erode-mirror"), "erode")
+    mirror.ensureSchema(schema, Nil)
+    val ckpt = tmpDir("erode-ckpt")
+    def run(): Unit = StreamMirror.start(spark.readStream.schema(schema).parquet(srcDir), mirror, ckpt)
+      .awaitTermination()
+    spark.range(0, 5).toDF("id").coalesce(1).write.mode("append").parquet(srcDir)
+    run() // batch 0
+    spark.range(5, 9).toDF("id").coalesce(1).write.mode("append").parquet(srcDir)
+    run() // batch 1
+    assert(mirror.optimize() > 0)
+    assert(mirror.liveAdds().forall(_.path.startsWith("data/optimize-")), "OPTIMIZE left a stream file")
+
+    // replay batch 1 on the same checkpoint: drop its commit marker, as a
+    // crash after the publish but before Spark's own commit leaves it
+    val fs = new org.apache.hadoop.fs.Path(ckpt).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$ckpt/commits/1"), false))
+    val v = mirror.currentVersion()
+    run()
+    assert(mirror.currentVersion() == v, "the replayed batch committed again")
+    assert(mirror.snapshot().count() == 9)
+
+    // checkpoint lost: the replay from batch 0 is still refused
+    spark.range(9, 10).toDF("id").coalesce(1).write.mode("append").parquet(srcDir)
+    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    def causes(t: Throwable): Seq[Throwable] = Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
+    assert(causes(e).exists(c => Option(c.getMessage).exists(_.contains("batchId regression"))), e.getMessage)
+    assert(mirror.snapshot().count() == 9)
+  }
+
   test("changesBetween edge cases: empty range, bad range, vacuumed history") {
     val mirror = new MirrorTable(spark, tmpDir("cdc-mirror"), "cdc")
     mirror.ensureSchema(schema, Nil)
@@ -88,7 +120,7 @@ class StreamMirrorSpec extends SparkSuite {
       .withColumn(KustoTypes.BlobPathColumn, org.apache.spark.sql.functions.lit("b0"))
       .withColumn(KustoTypes.IngestTsColumn,
         org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L))))
-    val v1 = mirror.publishStaged("s0", Seq("g-default"))
+    val v1 = mirror.publishStaged("s0", Seq("g-default"), "test", 0)
     mirror.deleteByLineage(Seq(("b0", None))) // tombstones the s0 file
     Thread.sleep(20)
     assert(mirror.vacuum(0L) >= 1)
@@ -104,7 +136,7 @@ class StreamMirrorSpec extends SparkSuite {
       .withColumn(KustoTypes.BlobPathColumn, org.apache.spark.sql.functions.lit("b0"))
       .withColumn(KustoTypes.IngestTsColumn,
         org.apache.spark.sql.functions.lit(new java.sql.Timestamp(0L))))
-    mirror.publishStaged("s0", Seq("g-default"))
+    mirror.publishStaged("s0", Seq("g-default"), "test", 0)
     val live = mirror.liveAdds() match {
       case Seq(only) => only
       case many      => fail(s"test needs exactly one published file, got ${many.size}")
