@@ -61,12 +61,11 @@ class MirrorTable(spark: SparkSession, dir: String, val name: String) {
     */
   def ensureSchema(sourceSchema: StructType, partitionColumns: Seq[String]): Unit = {
     val full = KustoTypes.withTrackingColumns(sourceSchema)
-    snapshotLog().flatMap(_.metadata) match {
+    currentMeta() match {
       case None =>
         writer.commit(Seq(writer.metaDataAction(
           java.util.UUID.randomUUID().toString, name, full, partitionColumns)))
-      case Some(m) =>
-        val (existing, pcols) = metaOf(m)
+      case Some((existing, pcols)) =>
         require(pcols == partitionColumns,
           s"Repartitioning unsupported: $pcols -> $partitionColumns")
         val merged = mergeSchemas(existing, full)
